@@ -130,6 +130,7 @@ class Sarkac:
                 checkpoint_dir=os.path.join(self.work_dir, "ckpt"),
                 trigger_seconds=trigger_seconds,
             )
+            self._listener.query_id = str(self.query.id)
             if (
                 (self.config.get("discovery") or {}).get("enabled")
                 and self._discovery_query is None
@@ -240,11 +241,9 @@ class Sarkac:
     def get_status(self) -> dict:
         """/status analogue (HttpServer.js:55-66)."""
         stored = None
-        if self.pipeline is not None:
-            try:
-                stored = self.pipeline._read_store().count()
-            except Exception:
-                stored = 0
+        if isinstance(self.pipeline, SigmaStreamPipeline):
+            # the keyed-state engine keeps no value store: no count
+            stored = self.pipeline._read_store().count()
         return status(self.counters, stored_events=stored)
 
     def close(self) -> None:

@@ -54,17 +54,27 @@ class StatsCounters:
 
 
 class SigmaQueryListener(StreamingQueryListener):  # pragma: no cover - thin
-    """Bridges StreamingQuery progress events onto the bus/counters —
-    ``message`` per input row batch, ``error`` on termination with cause."""
+    """Bridges ONE StreamingQuery's events onto the bus/counters —
+    ``message`` per input row batch, ``error`` on termination with cause.
+
+    A listener sees every query in the session (a discovery sidecar, a
+    caller's own queries), so only events whose query id equals
+    ``query_id`` count; ``None`` counts nothing. Set it to the started
+    query's ``id`` right after ``start()`` returns (progress is posted
+    only when a batch completes); the checkpoint keeps that id stable
+    across restarts."""
 
     def __init__(self, bus: EventBus, counters: StatsCounters) -> None:
         self.bus = bus
         self.counters = counters
+        self.query_id: str | None = None
 
     def onQueryStarted(self, event) -> None:
-        self.bus.emit("query-started", event.id)
+        pass
 
     def onQueryProgress(self, event) -> None:
+        if str(event.progress.id) != self.query_id:
+            return
         rows = int(event.progress.numInputRows)
         self.counters.scan_runs += 1
         self.counters.analysed_messages += rows
@@ -74,7 +84,7 @@ class SigmaQueryListener(StreamingQueryListener):  # pragma: no cover - thin
         pass
 
     def onQueryTerminated(self, event) -> None:
-        if event.exception is not None:
+        if str(event.id) == self.query_id and event.exception is not None:
             self.counters.errors += 1
             self.bus.emit("error", event.exception)
 

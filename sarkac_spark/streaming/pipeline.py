@@ -54,6 +54,7 @@ from sarkac_spark.config import (
 )
 from sarkac_spark.operators.anomaly import sigma_scan
 from sarkac_spark.operators.fields import dsl_field_exprs, to_sigma_store
+from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
 
 STORE_SCHEMA = "topic string, produced timestamp, key string, field_path string, value double"
 # epoch is a partition directory (epoch=N/topic=T/part-*.parquet): the
@@ -181,6 +182,7 @@ class SigmaStreamPipeline:
         # existence pre-check: an AnalysisException here would be caught
         # anyway, but Spark logs the miss loudly on every first batch
         if not os.path.exists(self.cfg.store_dir):
+            raise_if_half_swapped(self.cfg.store_dir)
             return self.spark.createDataFrame([], STORE_SCHEMA)
         try:
             return (
@@ -194,6 +196,7 @@ class SigmaStreamPipeline:
 
     def _read_state(self) -> DataFrame:
         if not os.path.exists(self._state_dir):
+            raise_if_half_swapped(self._state_dir)
             return self.spark.createDataFrame([], STATE_SCHEMA)
         try:
             return self.spark.read.schema(STATE_SCHEMA).parquet(self._state_dir)
@@ -239,9 +242,7 @@ class SigmaStreamPipeline:
         # tiny relation (one row per configured series); rewrite atomically
         tmp = self._state_dir + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self._state_dir):
-            shutil.rmtree(self._state_dir)
-        os.replace(tmp, self._state_dir)
+        atomic_swap(tmp, self._state_dir)
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         extracted = self.extract(batch)
@@ -353,14 +354,7 @@ class SigmaStreamPipeline:
         kept.write.mode("overwrite").partitionBy("topic").parquet(
             os.path.join(tmp, "epoch=0")
         )
-        state_backup = None
-        if os.path.exists(self._state_dir):
-            state_backup = tmp + ".state"
-            shutil.move(self._state_dir, state_backup)
-        shutil.rmtree(self.cfg.store_dir)
-        os.replace(tmp, self.cfg.store_dir)
-        if state_backup:
-            shutil.move(state_backup, self._state_dir)
+        atomic_swap(tmp, self.cfg.store_dir)
 
     def truncate(self) -> None:
         """S7: drop all engine state (reference SigmaModel.remove({}) via

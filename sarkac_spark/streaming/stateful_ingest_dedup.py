@@ -237,15 +237,13 @@ def _verify_batch(
     max_band_df: int | None,
     bottom_k: int | None,
 ):
-    """ENGINE-NEUTRAL verify+append core shared by the
-    ``applyInPandasWithState`` engine (``_band_verdicts``) and the
-    ``transformWithStateInPandas`` engine (``tws_ingest_dedup``): given
-    one band's batch rows (already concatenated) and its unpacked prior
-    state, return ``(out_pdf, new_state_or_None)`` where ``out_pdf``
-    carries the payload + ``__dropped`` and ``new_state`` is the packed
+    """Pure verify+append core of ``_band_verdicts``: given one band's
+    batch rows (already concatenated) and its unpacked prior state,
+    return ``(out_pdf, new_state_or_None)`` where ``out_pdf`` carries
+    the payload + ``__dropped`` and ``new_state`` is the packed
     post-append state triple (``None`` = no append happened, state
-    unchanged). Keeping this a pure function is what makes the two
-    engines' verdicts bit-identical by construction.
+    unchanged). Kept free of any state API so the verdicts can be
+    pinned directly, without a streaming query.
 
     Hot-path shape: most groups are a single fresh doc on a band with
     no state (the decade/seed profile), so the verify work is gated
@@ -334,13 +332,14 @@ def _seed_members(
     id_col: str,
     max_band_df: int | None,
 ):
-    """ENGINE-NEUTRAL bootstrap core (shared like ``_verify_batch``):
-    install the corpus rows of one band as state members — capped,
-    id-ordered, no verify — and return the packed state triple, or
-    ``None`` when the band is already at cap. The membership equals
-    what a full replay of the (already-deduped) corpus would have
-    installed: replay sorts the batch by id and appends the first
-    ``max_band_df`` members; exact ``xh|`` bands keep one member."""
+    """Pure bootstrap core of ``_seed_state`` (state-API-free like
+    ``_verify_batch``): install the corpus rows of one band as state
+    members — capped, id-ordered, no verify — and return the packed
+    state triple, or ``None`` when the band is already at cap. The
+    membership equals what a full replay of the (already-deduped)
+    corpus would have installed: replay sorts the batch by id and
+    appends the first ``max_band_df`` members; exact ``xh|`` bands keep
+    one member."""
     exact = key0.startswith(_EXACT_PREFIX)
     cap = 1 if exact else max_band_df
     if cap is not None and ids.size >= cap:
@@ -795,15 +794,9 @@ class StatefulDedupPipeline:
                     self.spark.streams.removeListener(listener)
             q.awaitTermination()
 
-        self._write_base_layer(corpus_df, n_docs)
-        return n_docs
-
-    def _write_base_layer(self, corpus_df: DataFrame, n_docs: int) -> None:
-        """Batch base layer for the downstream stores (epoch=-1: the
-        ``compact()`` shape — never collides with a checkpoint epoch,
-        and the replay-safety ``epoch != current`` filter never
-        excludes it). Shared by both onboarding paths (seed-trigger
-        bootstrap here, ``initialState`` in the TWS engine)."""
+        # batch base layer for the downstream stores (epoch=-1: the
+        # compact() shape — never collides with a checkpoint epoch, and
+        # the replay-safety ``epoch != current`` filter never excludes it)
         corpus_df.write.mode("overwrite").parquet(
             os.path.join(self.store_dir, "epoch=-1")
         )
@@ -821,6 +814,7 @@ class StatefulDedupPipeline:
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.funnel_dir, "epoch=-1")
         )
+        return n_docs
 
     def commit_batch(self, verdicts: DataFrame, epoch_id: int) -> None:
         """foreachBatch half: fold per-band verdicts to per-doc (drop if

@@ -135,14 +135,6 @@ class StreamingCuratorPipeline:
       (``process_batch`` raises), and its funnel has no pre-quality
       row — its ``input`` stage counts post-quality docs (the parquet
       arm's ``quality`` row).
-    - ``"tws"`` — ``TwsDedupPipeline``: the ``transformWithStateInPandas``
-      twin of ``"stateful"`` (same stores/semantics/cores): no seed
-      trigger (``backfill()`` stashes the curated corpus and the next
-      ``start()`` onboards it as ``initialState`` during batch 0) and
-      native value-TTL (availableNow drains legal in TTL mode). Needs
-      the RocksDB provider + a ``google.protobuf`` runtime to RUN
-      (``tws_available()``; ``start()`` raises with the remediation
-      otherwise — see ``streaming/tws_ingest_dedup.py``).
     """
 
     def __init__(
@@ -160,10 +152,9 @@ class StreamingCuratorPipeline:
                 f"no streaming member for curation stage(s) {sorted(unknown)}; "
                 "run them as a batch pass over committed()"
             )
-        if engine not in ("parquet", "stateful", "tws"):
+        if engine not in ("parquet", "stateful"):
             raise ValueError(
-                f"unknown engine {engine!r}: expected 'parquet', 'stateful' "
-                "or 'tws'"
+                f"unknown engine {engine!r}: expected 'parquet' or 'stateful'"
             )
         self.spark = spark
         self.store_dir = store_dir
@@ -174,21 +165,12 @@ class StreamingCuratorPipeline:
         self.text_col = text_col
         self.engine = engine
         dedup_cfg = config.get("dedup") or {}
-        if engine in ("stateful", "tws"):
-            if engine == "tws":
-                # the transformWithStateInPandas twin: same stores and
-                # semantics, initialState onboarding + native value-TTL;
-                # needs a protobuf runtime to RUN (start() checks) —
-                # see streaming/tws_ingest_dedup.py
-                from sarkac_spark.streaming.tws_ingest_dedup import (
-                    TwsDedupPipeline as _Engine,
-                )
-            else:
-                from sarkac_spark.streaming.stateful_ingest_dedup import (
-                    StatefulDedupPipeline as _Engine,
-                )
+        if engine == "stateful":
+            from sarkac_spark.streaming.stateful_ingest_dedup import (
+                StatefulDedupPipeline,
+            )
 
-            self._stateful = _Engine(
+            self._stateful = StatefulDedupPipeline(
                 spark,
                 store_dir,
                 id_col=id_col,
@@ -207,9 +189,6 @@ class StreamingCuratorPipeline:
                 text_col=text_col,
                 minhash=dedup_cfg.get("minhash"),
             )
-        # tws onboarding stash (set by backfill, read by start; kept
-        # across failed starts — see start()'s docstring)
-        self._tws_initial_corpus: DataFrame | None = None
         if "quality" in config:
             # drive the REAL batch stage builder (the curation_funnel
             # precedent): stream and batch quality verdicts are one
@@ -232,33 +211,6 @@ class StreamingCuratorPipeline:
                 raise_if_half_swapped(path)
                 return None
             raise
-
-    def _base_layer_exists(self) -> bool:
-        store = self._read_or_none(self.store_dir)
-        return store is not None and not store.filter(
-            F.col("epoch") == -1
-        ).isEmpty()
-
-    def _committed_batches(self, checkpoint_dir: str) -> int:
-        """Number of COMMITTED streaming batches in a checkpoint (the
-        numeric entries of ``commits/``), through the Hadoop FS API so
-        it holds on HDFS/S3. 0 for a fresh checkpoint AND for a
-        crashed-batch-0 retry (offsets written, nothing committed) —
-        exactly the states where ``initialState`` is still consumable.
-        Leftover ``.tmp`` files from a crashed commit rename are not
-        numeric, so they don't count."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(checkpoint_dir, "commits")
-        )
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return 0
-        return sum(
-            1
-            for st in fs.listStatus(hpath)
-            if st.getPath().getName().isdigit()
-        )
 
     def committed(self) -> DataFrame:
         """The curated corpus so far (full input schema)."""
@@ -341,91 +293,14 @@ class StreamingCuratorPipeline:
         doc_stream: DataFrame,
         checkpoint_dir: str,
         trigger_seconds: int | None = None,
-        initial_corpus: DataFrame | None = None,
     ):
-        """``initial_corpus`` (tws engine only): the already-curated
-        corpus to onboard as batch-0 ``initialState`` on a FRESH
-        checkpoint — normally supplied implicitly by a preceding
-        ``backfill()`` in the same process; pass ``committed()``
-        explicitly when starting a fresh checkpoint over an existing
-        base layer from a NEW process (the stash does not survive a
-        restart, the parquet base layer does)."""
         if self._stateful is not None:
             # quality gates are stateless closures — apply them to the
             # stream before the stateful engine's DAG (its composition
             # contract); dedup + quota live inside the engine
             if self._quality_fn is not None:
                 doc_stream = self._quality_fn(doc_stream)
-            if self.engine == "tws":
-                # NOT popped: a failed/retried start must not lose the
-                # onboarding corpus (Spark consumes initialState only
-                # on batch 0 of a fresh checkpoint). Explicit None
-                # check — DataFrame truthiness is fragile (pandas-on-
-                # Spark frames define __len__).
-                stash = getattr(self, "_tws_initial_corpus", None)
-                corpus = initial_corpus if initial_corpus is not None else stash
-                committed = self._committed_batches(checkpoint_dir)
-                if corpus is not None and committed > 0:
-                    if (
-                        initial_corpus is None
-                        and getattr(self, "_tws_stash_checkpoint", None)
-                        == checkpoint_dir
-                    ):
-                        # the stash was handed to THIS checkpoint's
-                        # batch 0 and that batch committed — clean
-                        # restart, nothing left to onboard
-                        corpus = None
-                    else:
-                        raise ValueError(
-                            "initial_corpus would be silently IGNORED: "
-                            "Spark consumes transformWithState "
-                            "initialState only on batch 0 of a fresh "
-                            "checkpoint, and this checkpoint already "
-                            f"has {committed} committed batch(es). The "
-                            "onboarding docs would get no band state, "
-                            "so their future duplicates would re-admit "
-                            "and double-commit. Either keep streaming "
-                            "on this checkpoint WITHOUT a backfill, or "
-                            "rebuild on a FRESH checkpoint with "
-                            "initial_corpus=committed()."
-                        )
-                if (
-                    corpus is not None
-                    and committed == 0
-                    and initial_corpus is None
-                ):
-                    # record where batch 0 will consume the stash, so a
-                    # later restart on the same checkpoint is recognized
-                    # as already-onboarded instead of raising. Only when
-                    # the STASH is what batch 0 consumes — an explicit
-                    # initial_corpus must not mark a still-unconsumed
-                    # stash as handled
-                    self._tws_stash_checkpoint = checkpoint_dir
-                if corpus is None and self._base_layer_exists():
-                    from sarkac_spark.streaming.stateful_ingest_dedup import (
-                        _fs_entry_count,
-                    )
-
-                    if _fs_entry_count(self.spark, checkpoint_dir) is None:
-                        raise ValueError(
-                            "store has an epoch=-1 base layer but this is "
-                            "a FRESH checkpoint with no initial_corpus: "
-                            "batch 0 would install no band state, so "
-                            "replays of backfilled docs would re-admit "
-                            "and double-commit. Pass "
-                            "initial_corpus=pipe.committed() (the "
-                            "backfill stash does not survive a process "
-                            "restart)."
-                        )
-                return self._stateful.start(
-                    doc_stream,
-                    checkpoint_dir,
-                    trigger_seconds,
-                    initial_corpus=corpus,
-                )
-            return self._stateful.start(
-                doc_stream, checkpoint_dir, trigger_seconds
-            )
+            return self._stateful.start(doc_stream, checkpoint_dir, trigger_seconds)
         writer = doc_stream.writeStream.foreachBatch(self.process_batch).option(
             "checkpointLocation", checkpoint_dir
         )
@@ -439,8 +314,7 @@ class StreamingCuratorPipeline:
         self, corpus_df: DataFrame, checkpoint_dir: str, source_dir: str
     ) -> int:
         """Bulk-onboard an existing (already-curated) corpus — keyed-
-        state engines only; see ``StatefulDedupPipeline.bootstrap_state``
-        (the tws engine raises with its initialState pointer)."""
+        state engine only; see ``StatefulDedupPipeline.bootstrap_state``."""
         if self._stateful is None:
             raise RuntimeError(
                 "bootstrap_state is the keyed-state engine's bulk onboard; "
@@ -481,27 +355,28 @@ class StreamingCuratorPipeline:
           convention), not the raw-input funnel.
 
         Returns the number of docs committed by the backfill."""
-        if self.engine != "stateful" and self._base_layer_exists():
-            # the stateful arm is guarded by bootstrap_state's
-            # fresh-checkpoint check; parquet and tws must refuse here
-            # or the overwrite silently drops the first corpus
-            raise ValueError(
-                "store already has an epoch=-1 base layer (a prior "
-                "backfill or compact()) — a second backfill would "
-                "overwrite it; stream the new corpus instead (it dedups "
-                "against the existing state), or backfill into a fresh "
-                "store"
-            )
         if self._stateful is None:
+            store = self._read_or_none(self.store_dir)
+            if store is not None and not store.filter(
+                F.col("epoch") == -1
+            ).isEmpty():
+                # the stateful arm is guarded by bootstrap_state's
+                # fresh-checkpoint check; parquet must refuse here or
+                # the overwrite silently drops the first corpus
+                raise ValueError(
+                    "store already has an epoch=-1 base layer (a prior "
+                    "backfill or compact()) — a second backfill would "
+                    "overwrite it; stream the new corpus instead (it "
+                    "dedups against the existing state), or backfill "
+                    "into a fresh store"
+                )
             self.process_batch(corpus_df, -1)
             store = self._read_or_none(self.store_dir)
             return (
                 0 if store is None
                 else store.filter(F.col("epoch") == -1).count()
             )
-        if self.engine == "stateful" and (
-            checkpoint_dir is None or source_dir is None
-        ):
+        if checkpoint_dir is None or source_dir is None:
             raise ValueError(
                 "stateful-engine backfill onboards band state into the "
                 "streaming checkpoint: pass checkpoint_dir (fresh) and "
@@ -532,20 +407,6 @@ class StreamingCuratorPipeline:
                 d = apply_domain_quota(
                     d, None, self.config["domain_cap"], self.id_col
                 )
-            if self.engine == "tws":
-                # no seed trigger at all: write the base stores now,
-                # stash the survivors — the next start() hands them to
-                # the operator as initialState (batch-0 onboarding)
-                d = d.localCheckpoint(eager=True)
-                n = self._stateful.onboard_base_layer(d)
-                self._tws_initial_corpus = d
-                # a NEW stash is unconsumed by definition: forget any
-                # already-onboarded marker from a prior backfill, or
-                # start() on that checkpoint would take the clean-restart
-                # branch and silently drop THIS stash (the exact
-                # silent-ignore its guard exists to make loud)
-                self._tws_stash_checkpoint = None
-                return n
             return self._stateful.bootstrap_state(
                 d, checkpoint_dir, source_dir
             )
@@ -562,7 +423,7 @@ class StreamingCuratorPipeline:
         per stage. Swaps are crash-safe (``storeutil.atomic_swap``).
         Returns the compacted doc count."""
         if self._stateful is not None:
-            # the keyed-state engines fold their own text/quota/funnel
+            # the keyed-state engine folds its own text/quota/funnel
             # stores (band state needs no compaction — the checkpoint
             # maintains it)
             return self._stateful.compact(target_partitions)

@@ -144,7 +144,9 @@ def test_ml_queries_rows_only(spark):
 def test_facade_stateful_engine(spark, tmp_path):
     """engine='stateful' routes the same reference API through the
     keyed-state pipeline: planted anomalies land in anomalies(), the bus
-    sees message counts via the query listener, close() detaches it."""
+    sees message counts via the query listener, close() detaches it,
+    and /status carries no storedEvents (this engine keeps no value
+    store)."""
     from sarkac_spark.sarkac import Sarkac
     from sarkac_spark.sources.synthetic import TOPIC, example_messages
 
@@ -175,6 +177,8 @@ def test_facade_stateful_engine(spark, tmp_path):
     s.on("message", counts.append)
     q = s.analyse(stream, trigger_seconds=1)
     q.processAllAvailable()
+    st = s.get_status()
+    assert "storedEvents" not in st and st["stats"]["errors"] == 0
     s.close()
 
     rows = s.anomalies().collect()

@@ -7,16 +7,22 @@ admission rule."""
 
 from __future__ import annotations
 
-import pytest
-
-# e2e tier: real streaming queries / subprocess sessions — minutes each.
-# Excluded from the default (driver-verify) fast run; the builder's
-# once-per-round full run includes them (pytest -m "slow or not slow").
-pytestmark = pytest.mark.slow
-
-
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from sarkac_spark.streaming.stateful_ingest_dedup import (
+    _pack_state,
+    _seed_members,
+    _unpack_state,
+    _verify_batch,
+)
+
+# Two tiers in this file: the pure verify/seed core tests run in the
+# fast tier (no Spark session); every Spark test is marked ``slow``
+# (real streaming queries / subprocess sessions — minutes each) and is
+# included by the full run (pytest -m "slow or not slow").
 
 SCHEMA = "doc_id long, text string, source string"
 MH = {"k": 16, "bands": 8, "threshold": 0.5}
@@ -73,6 +79,7 @@ def _run(spark, tmp_path, epochs, tag="s", **pipe_kw):
     return pipe
 
 
+@pytest.mark.slow
 def test_row_signatures_match_dedup_signatures(spark):
     """The stream-legal per-row signer == the batch groupBy signer on
     every column, including the empty/short-doc guards and the
@@ -101,6 +108,7 @@ def test_row_signatures_match_dedup_signatures(spark):
         assert list(ra.sh_set) == list(rb.sh_set)
 
 
+@pytest.mark.slow
 def test_stateful_matches_parquet_arm_on_chain_free_corpus(spark, tmp_path):
     """On a chain-free corpus (pairwise dups only) the keyed-state
     engine commits EXACTLY the parquet arm's survivor set, across
@@ -132,6 +140,7 @@ def test_stateful_matches_parquet_arm_on_chain_free_corpus(spark, tmp_path):
     assert funnel == {"input": 8, "dedup": 5}
 
 
+@pytest.mark.slow
 def test_chain_divergence_is_the_documented_contract(spark, tmp_path):
     """A committed, B dropped (~A), C ~B-but-not-~A: the parquet arm
     keeps C (committed-corpus membership), the keyed-state engine drops
@@ -154,6 +163,7 @@ def test_chain_divergence_is_the_documented_contract(spark, tmp_path):
     assert {r.doc_id for r in ref.committed().collect()} == {1, 3}
 
 
+@pytest.mark.slow
 def test_within_batch_rule_lower_id_mate_wins(spark, tmp_path):
     """One batch holding an exact pair and a near pair: the lower id of
     each pair survives — the incremental_minhash_drop_ids within-batch
@@ -166,6 +176,7 @@ def test_within_batch_rule_lower_id_mate_wins(spark, tmp_path):
     assert {r.doc_id for r in pipe.committed().collect()} == {2, 3}
 
 
+@pytest.mark.slow
 def test_exact_only_mode_no_shingle_state(spark, tmp_path):
     """minhash=None: exact digests only — near-dups pass, byte dups die
     across epochs."""
@@ -177,6 +188,7 @@ def test_exact_only_mode_no_shingle_state(spark, tmp_path):
     assert {r.doc_id for r in pipe.committed().collect()} == {1, 3}
 
 
+@pytest.mark.slow
 def test_kill_resume_no_double_commit(spark, tmp_path):
     """Stop after the first file, restart on the same checkpoint: the
     committed set equals the one-shot run (per-epoch overwrite + state
@@ -207,6 +219,7 @@ def test_kill_resume_no_double_commit(spark, tmp_path):
     assert {r.doc_id for r in pipe.committed().collect()} == {1, 2, 7}
 
 
+@pytest.mark.slow
 def test_domain_cap_shared_quota(spark, tmp_path):
     """The quota stage is apply_domain_quota (the curator's rule): web
     fills its cap of 2 across epochs; compaction folds the running
@@ -228,6 +241,7 @@ def test_domain_cap_shared_quota(spark, tmp_path):
     assert counts == {"web": 2, "blog": 1}
 
 
+@pytest.mark.slow
 def test_quota_rejected_docs_join_the_seen_corpus(spark, tmp_path):
     """Band state is appended inside the stateful operator, upstream of
     the quota stage, so a quota-REJECTED doc still joins the seen
@@ -262,6 +276,7 @@ def test_quota_rejected_docs_join_the_seen_corpus(spark, tmp_path):
     assert {r.doc_id for r in ref.committed().collect()} == {1, 3}
 
 
+@pytest.mark.slow
 def test_runs_on_rocksdb_provider(spark, tmp_path):
     """The deployment shape (BENCH_STREAM_DECADE's flat arm): the same
     chain-free verdicts under the RocksDB state store + changelog
@@ -303,6 +318,7 @@ def test_runs_on_rocksdb_provider(spark, tmp_path):
             spark.conf.set(_CLOG, saved_clog)
 
 
+@pytest.mark.slow
 def test_bootstrap_state_matches_trigger_replay(spark, tmp_path):
     """bootstrap_state installs the same band membership a trigger
     replay of the (deduped) corpus would: after onboarding, streamed
@@ -374,6 +390,7 @@ def test_bootstrap_state_matches_trigger_replay(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_state_ttl_evicts_idle_bands(spark, tmp_path):
     """state_ttl_seconds: a band idle past the TTL is evicted (timeout
     fires on the next batch that runs without data for it), so a dup of
@@ -456,6 +473,7 @@ def test_state_ttl_evicts_idle_bands(spark, tmp_path):
     q.awaitTermination()
 
 
+@pytest.mark.slow
 def test_bootstrap_state_with_ttl_terminates_and_seeds(spark, tmp_path):
     """r10 ADVICE (medium): ``bootstrap_state`` on a TTL-configured
     pipeline used availableNow under ProcessingTimeTimeout — a run that
@@ -509,6 +527,7 @@ def test_bootstrap_state_with_ttl_terminates_and_seeds(spark, tmp_path):
     assert got == {1, 2, 4}
 
 
+@pytest.mark.slow
 def test_hot_band_stops_matching_and_growing(spark, tmp_path):
     """A band at its all-time df cap stops matching (docs can still
     pair via other bands) and stops growing — per-row work stays
@@ -529,6 +548,7 @@ def test_hot_band_stops_matching_and_growing(spark, tmp_path):
     assert {r.doc_id for r in pipe.committed().collect()} == {1, 2}
 
 
+@pytest.mark.slow
 def test_preflight_state_schema_flags_pre_binary_checkpoint(spark, tmp_path):
     """r10 ADVICE: a checkpoint written by the r9 array<long> schema
     fails Spark's own validation with no remediation; the start()
@@ -555,3 +575,165 @@ def test_preflight_state_schema_flags_pre_binary_checkpoint(spark, tmp_path):
     )
     _preflight_state_schema(spark, str(tmp_path / "ckpt"))  # no raise
     _preflight_state_schema(spark, str(tmp_path / "absent"))  # no raise
+
+
+# --- the pure per-band cores, driven directly (fast tier) -----------------
+
+# deterministic shingle-hash sets: J(A,B) = 6/10 = 0.6 >= 0.5,
+# J(A,C) = 2/14 < 0.5, J(B,C) = 0/16
+SET_A = [1, 2, 3, 4, 5, 6, 7, 8]
+SET_B = [3, 4, 5, 6, 7, 8, 9, 10]
+SET_C = [1, 2, 100, 101, 102, 103, 104, 105]
+
+
+class _State:
+    """The two GroupState members ``_unpack_state`` reads."""
+
+    def __init__(self, packed=None):
+        self.exists = packed is not None
+        self.get = packed
+
+
+def _band_rows(rows, key="mh|b0"):
+    """rows: list of (doc_id, sh_set list) -> one band's batch frame."""
+    return pd.DataFrame(
+        {
+            "doc_id": [r[0] for r in rows],
+            "text": [f"t{r[0]}" for r in rows],
+            "sh_set": [np.asarray(r[1], dtype=np.int64) for r in rows],
+            "band_key": [key] * len(rows),
+        }
+    )
+
+
+def _drive(batches, key="mh|b0", max_band_df=4, bottom_k=None):
+    """Run ``_verify_batch`` over a batch sequence, threading the packed
+    state through ``_unpack_state`` the way ``_band_verdicts`` does.
+    Returns (per-batch dropped lists, per-batch appended?, final
+    unpacked state)."""
+    ids, lens, shs = _unpack_state(_State())
+    verdicts, appended = [], []
+    for rows in batches:
+        out, new_state = _verify_batch(
+            key, _band_rows(rows, key), ids, lens, shs,
+            "doc_id", 0.5, max_band_df, bottom_k,
+        )
+        assert list(out.columns) == ["doc_id", "text", "__dropped"]
+        verdicts.append(out["__dropped"].tolist())
+        appended.append(new_state is not None)
+        if new_state is not None:
+            ids, lens, shs = _unpack_state(_State(new_state))
+    return verdicts, appended, (ids, lens, shs)
+
+
+def test_verify_batch_seen_corpus_across_batches():
+    """Within a batch a doc drops against a lower-id mate; across
+    batches against any SEEN member, dropped or not (doc 4 matches
+    doc 2, itself dropped)."""
+    verdicts, appended, (ids, lens, shs) = _drive(
+        [[(1, SET_A)], [(3, SET_C), (2, SET_B)], [(4, SET_B)]]
+    )
+    assert verdicts == [[False], [True, False], [True]]
+    assert appended == [True, True, True]
+    assert ids.tolist() == [1, 2, 3, 4]
+    assert lens.tolist() == [8, 8, 8, 8]
+    assert shs.tolist() == SET_A + SET_B + SET_C + SET_B
+
+
+def test_verify_batch_exact_band_presence():
+    """``xh|`` bands match on presence and keep one member forever:
+    the first doc is admitted, every replay drops, and a replay appends
+    nothing (no state rewrite)."""
+    verdicts, appended, (ids, lens, shs) = _drive(
+        [[(1, [])], [(2, [])], [(3, [])]], key="xh|deadbeef"
+    )
+    assert verdicts == [[False], [True], [True]]
+    assert appended == [True, False, False]
+    assert ids.tolist() == [1] and lens.tolist() == [0] and shs.size == 0
+    # within one batch on a fresh band the lowest id wins
+    verdicts, _, (ids, _, _) = _drive([[(9, []), (7, [])]], key="xh|beef")
+    assert verdicts == [[False, True]]
+    assert ids.tolist() == [7]
+
+
+def test_verify_batch_hot_band_cap():
+    """At ``max_band_df`` members a band stops matching AND stops
+    growing: docs 3 and 4 (near-dups of seen members) are admitted and
+    the state keeps its first two members."""
+    verdicts, appended, (ids, _, _) = _drive(
+        [[(1, SET_A)], [(2, SET_C)], [(3, SET_B)], [(4, SET_A)]],
+        max_band_df=2,
+    )
+    assert verdicts == [[False], [False], [False], [False]]
+    assert appended == [True, True, False, False]
+    assert ids.tolist() == [1, 2]
+
+
+def test_verify_batch_bottom_k_estimator():
+    """With ``max_sh_set`` truncation the verdict uses the union-
+    bottom-k estimator, not exact Jaccard. A vs D: exact J = 4/12
+    (kept); with k=4 the 4 smallest of A∪D are all shared (dropped)."""
+    set_d = [1, 2, 3, 4, 20, 21, 22, 23]
+    exact, _, _ = _drive([[(1, SET_A)], [(2, set_d)]])
+    assert exact == [[False], [False]]
+    est, _, _ = _drive([[(1, SET_A)], [(2, set_d)]], bottom_k=4)
+    assert est == [[False], [True]]
+    # A vs B at k=6: 4 of the 6 smallest of A∪B are shared -> 0.666667
+    est, _, _ = _drive([[(1, SET_A)], [(2, SET_B)]], bottom_k=6)
+    assert est == [[False], [True]]
+    est, _, _ = _drive([[(1, SET_A)], [(2, SET_C)]], bottom_k=6)
+    assert est == [[False], [False]]
+
+
+def test_pack_unpack_state_roundtrip():
+    """State crosses the Arrow boundary as three little-endian buffers;
+    ``_unpack_state`` reads exactly what ``_pack_state`` writes, and an
+    absent state reads as three empty arrays of the same dtypes."""
+    packed = _pack_state([1, 2], [3, 0], [10, 20, 30])
+    assert packed[0] == (1).to_bytes(8, "little") + (2).to_bytes(8, "little")
+    assert packed[1] == (3).to_bytes(4, "little") + (0).to_bytes(4, "little")
+    ids, lens, shs = _unpack_state(_State(packed))
+    assert (ids.tolist(), lens.tolist(), shs.tolist()) == (
+        [1, 2], [3, 0], [10, 20, 30]
+    )
+    empty = _unpack_state(_State())
+    assert [a.dtype.str for a in empty] == ["<i8", "<i4", "<i8"]
+    assert all(a.size == 0 for a in empty)
+
+
+def test_seed_members_then_verify():
+    """Seeding installs the membership a replay of the deduped corpus
+    would append (id-ordered, capped, one member on exact bands), and a
+    later near-dup of a seeded doc is dropped."""
+    corpus = _band_rows([(2, SET_C), (1, SET_A)])
+    empty = _unpack_state(_State())
+    seeded = _seed_members("mh|b0", corpus, *empty, "doc_id", 4)
+    _, replayed = _verify_batch(
+        "mh|b0", corpus, *empty, "doc_id", 0.5, 4, None
+    )
+    assert seeded == replayed
+    ids, lens, shs = _unpack_state(_State(seeded))
+    assert ids.tolist() == [1, 2]
+    out, _ = _verify_batch(
+        "mh|b0", _band_rows([(3, SET_B)]), ids, lens, shs,
+        "doc_id", 0.5, 4, None,
+    )
+    assert out["__dropped"].tolist() == [True]
+
+    # the df cap bounds an incremental (chunked) install; a band at cap
+    # returns None (no state write)
+    state = empty
+    for lo in (0, 2):
+        chunk = _band_rows([(lo + 2, SET_B), (lo + 1, SET_A)])
+        state = _unpack_state(
+            _State(_seed_members("mh|b0", chunk, *state, "doc_id", 3))
+        )
+    assert state[0].tolist() == [1, 2, 3]
+    chunk = _band_rows([(9, SET_A)])
+    assert _seed_members("mh|b0", chunk, *state, "doc_id", 3) is None
+
+    exact = _band_rows([(5, []), (4, [])], key="xh|beef")
+    ids, lens, _ = _unpack_state(
+        _State(_seed_members("xh|beef", exact, *empty, "doc_id", None))
+    )
+    assert ids.tolist() == [4] and lens.tolist() == [0]

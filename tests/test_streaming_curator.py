@@ -446,146 +446,14 @@ def test_backfill_routes_by_engine(spark, tmp_path):
     assert {r.doc_id for r in sf.committed().collect()} == EXPECTED | {21}
 
 
-def test_engine_tws_facade_switch(spark, tmp_path):
-    """engine="tws" wires the transformWithStateInPandas twin through
-    the facade: construction + routing work everywhere that does not
-    need the state server; start() raises the actionable protobuf
-    error in this sandbox (e2e parity is the pytest -m tws gate);
-    backfill() batch-curates, writes the base layer, and stashes the
-    survivors for initialState onboarding at the next start()."""
+def test_unknown_engine_rejected():
+    """The engine knob takes exactly the two shipped engines; the
+    check runs before any Spark call."""
     from sarkac_spark.streaming.streaming_curator import StreamingCuratorPipeline
-    from sarkac_spark.streaming.tws_ingest_dedup import tws_available
 
-    with pytest.raises(ValueError, match="tws"):
-        StreamingCuratorPipeline(
-            spark, str(tmp_path / "s0"), CONFIG, engine="nope"
+    for engine in ("nope", "tws"):
+        with pytest.raises(ValueError) as e:
+            StreamingCuratorPipeline(None, "unused", CONFIG, engine=engine)
+        assert str(e.value) == (
+            f"unknown engine {engine!r}: expected 'parquet' or 'stateful'"
         )
-
-    pipe = StreamingCuratorPipeline(
-        spark, str(tmp_path / "store_tws"), CONFIG, engine="tws"
-    )
-    with pytest.raises(RuntimeError, match="start"):
-        pipe.process_batch(spark.createDataFrame(_epochs()[0], SCHEMA), 0)
-
-    # backfill: full batch curation (quality+dedup+quota) + base layer,
-    # no streaming query needed
-    raw = [r for rows in _epochs() for r in rows]
-    n = pipe.backfill(spark.createDataFrame(raw, SCHEMA))
-    assert n == len(EXPECTED)
-    assert {r.doc_id for r in pipe.committed().collect()} == EXPECTED
-    assert pipe._tws_initial_corpus is not None
-    funnel = {(r.stage, r.n_docs) for r in pipe.funnel().collect()}
-    assert funnel == {
-        ("input", n), ("dedup", n), ("domain_cap", n)
-    }  # base-layer convention: onboarded counts
-
-    # a second backfill would overwrite the base layer: refused (same
-    # guard as the parquet arm)
-    with pytest.raises(ValueError, match="epoch=-1 base layer"):
-        pipe.backfill(spark.createDataFrame(raw, SCHEMA))
-
-    # compact() delegates to the engine's fold
-    assert pipe.compact() == len(EXPECTED)
-
-    if not tws_available():
-        # start() refuses with the remediation instead of crashing in
-        # the JVM (PROBE_TWS.json records this sandbox's state)
-        stream = spark.readStream.schema(SCHEMA).parquet(
-            str(tmp_path / "none") + "/*"
-        )
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            pipe.start(stream, str(tmp_path / "ckpt_tws"))
-        # the failed start must NOT consume the onboarding stash — a
-        # retry still onboards the corpus (r11 review finding)
-        assert pipe._tws_initial_corpus is not None
-
-        # fresh checkpoint over an existing base layer from a NEW
-        # process (no stash): refuse before batch 0 can run stateless
-        pipe2 = StreamingCuratorPipeline(
-            spark, str(tmp_path / "store_tws"), CONFIG, engine="tws"
-        )
-        with pytest.raises(ValueError, match="initial_corpus"):
-            pipe2.start(stream, str(tmp_path / "ckpt_tws2"))
-        # supplying the corpus explicitly passes the guard (and then
-        # hits the documented protobuf refusal in this sandbox)
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            pipe2.start(
-                stream,
-                str(tmp_path / "ckpt_tws2"),
-                initial_corpus=pipe2.committed(),
-            )
-
-
-def test_tws_initial_state_not_silently_ignored(spark, tmp_path):
-    """r11 ADVICE (medium): Spark consumes transformWithState
-    initialState only on batch 0 of a FRESH checkpoint. A backfill
-    stash (or explicit initial_corpus) handed to a checkpoint that
-    already has committed batches would be silently dropped — the
-    backfilled docs would carry no band state and their duplicates
-    would double-commit. start() must refuse loudly, while a clean
-    restart of the checkpoint that DID consume the stash stays legal."""
-    from sarkac_spark.streaming.streaming_curator import (
-        StreamingCuratorPipeline,
-    )
-    from sarkac_spark.streaming.tws_ingest_dedup import tws_available
-
-    pipe = StreamingCuratorPipeline(
-        spark, str(tmp_path / "store"), CONFIG, engine="tws"
-    )
-    raw = [r for rows in _epochs() for r in rows]
-    pipe.backfill(spark.createDataFrame(raw, SCHEMA))
-    assert pipe._tws_initial_corpus is not None
-
-    # fabricate a checkpoint with one COMMITTED batch
-    ck = tmp_path / "ckpt_committed"
-    (ck / "commits").mkdir(parents=True)
-    (ck / "commits" / "0").write_text("v1\n{}")
-    stream = spark.readStream.schema(SCHEMA).parquet(
-        str(tmp_path / "none") + "/*"
-    )
-    # stash pending + committed checkpoint -> loud refusal
-    with pytest.raises(ValueError, match="IGNORED"):
-        pipe.start(stream, str(ck))
-    # explicit initial_corpus on a committed checkpoint -> same refusal
-    with pytest.raises(ValueError, match="IGNORED"):
-        pipe.start(stream, str(ck), initial_corpus=pipe.committed())
-    # the refusals must not have consumed the stash
-    assert pipe._tws_initial_corpus is not None
-
-    # clean-restart path: the stash was consumed by THIS checkpoint's
-    # batch 0 -> start() passes the guard (then hits this sandbox's
-    # documented protobuf refusal instead of silently dropping state)
-    pipe._tws_stash_checkpoint = str(ck)
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            pipe.start(stream, str(ck))
-
-        # an EXPLICIT initial_corpus on a fresh checkpoint must not
-        # mark the still-pending stash as consumed — only batch 0
-        # actually fed the STASH may move the marker (r12 review)
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            pipe.start(
-                stream,
-                str(tmp_path / "ckpt_fresh"),
-                initial_corpus=pipe.committed(),
-            )
-        assert pipe._tws_stash_checkpoint == str(ck)
-
-    # a NEW backfill stash invalidates any already-onboarded marker:
-    # otherwise start() on that checkpoint would take the clean-restart
-    # branch and silently drop the fresh stash (r12 review)
-    pipe3 = StreamingCuratorPipeline(
-        spark, str(tmp_path / "store3"), CONFIG, engine="tws"
-    )
-    pipe3._tws_stash_checkpoint = "stale-ck"
-    pipe3.backfill(spark.createDataFrame(raw, SCHEMA))
-    assert pipe3._tws_stash_checkpoint is None
-
-    # commit counting: absent dir and non-numeric leftovers are not
-    # committed batches (a crashed commit rename leaves .tmp files)
-    assert pipe._committed_batches(str(tmp_path / "ckpt_absent")) == 0
-    ck2 = tmp_path / "ckpt_tmponly"
-    (ck2 / "commits").mkdir(parents=True)
-    (ck2 / "commits" / ".0.tmp").write_text("")
-    assert pipe._committed_batches(str(ck2)) == 0
-    assert pipe._committed_batches(str(ck)) == 1

@@ -46,12 +46,23 @@ def test_salted_join_row_identical_and_distributed(spark):
 
 def test_query_listener_bridges_progress_to_bus(tmp_path, spark):
     """SigmaQueryListener must tick counters/bus from real streaming
-    progress events."""
+    progress events of ITS query only: a concurrent query's rows and a
+    concurrent query's failure in the same session are not counted."""
     from sarkac_spark.streaming.listener import (
         EventBus,
         SigmaQueryListener,
         StatsCounters,
     )
+
+    def _stream(name, n_rows):
+        src = tmp_path / name
+        spark.createDataFrame(
+            [(i,) for i in range(n_rows)], "v long"
+        ).write.parquet(str(src / "b0"))
+        return spark.readStream.schema("v long").parquet(str(src / "*"))
+
+    def _fail(batch, epoch_id):
+        raise RuntimeError("not the tracked query")
 
     bus, counters = EventBus(), StatsCounters()
     seen: list[int] = []
@@ -59,28 +70,39 @@ def test_query_listener_bridges_progress_to_bus(tmp_path, spark):
     listener = SigmaQueryListener(bus, counters)
     spark.streams.addListener(listener)
     try:
-        src = tmp_path / "src"
-        spark.createDataFrame([(1,)], "v long").write.parquet(str(src / "b0"))
         q = (
-            spark.readStream.schema("v long")
-            .parquet(str(src / "*"))
+            _stream("src", 1)
             .writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .start()
         )
+        listener.query_id = str(q.id)
+        other = (
+            _stream("src_other", 3)
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt_other"))
+            .start()
+        )
+        failing = (
+            _stream("src_fail", 1)
+            .writeStream.foreachBatch(_fail)
+            .option("checkpointLocation", str(tmp_path / "ckpt_fail"))
+            .start()
+        )
         q.processAllAvailable()
+        other.processAllAvailable()
+        with pytest.raises(Exception, match="not the tracked query"):
+            failing.awaitTermination(120)
         q.stop()
-        # listener events are delivered asynchronously post-stop
-        import time
-
-        deadline = time.time() + 10
-        while time.time() < deadline and counters.analysed_messages < 1:
-            time.sleep(0.2)
+        other.stop()
+        # listener events are delivered asynchronously: drain the bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     finally:
         spark.streams.removeListener(listener)
-    assert counters.analysed_messages >= 1
+    assert counters.analysed_messages == 1
     assert counters.scan_runs >= 1
-    assert sum(seen) >= 1
+    assert sum(seen) == 1
+    assert counters.errors == 0
 
 
 def test_register_views_exposes_oracle_names(spark, sf_dir):

@@ -17,8 +17,9 @@ core-s / 8000 cores ~ 17 min; the local-32-core wall is the wrong lens
 for it. No offline state writer is reachable FROM this operator (the
 state data source is read-only — probed: df.write.format("statestore")
 fails with STDS_COMMITTED_BATCH_UNAVAILABLE, there is no write path);
-the API-level bypass is transformWithStateInPandas(initialState=...),
-environment-blocked here — see BASELINE.md §tws / tools/probe_tws.py.
+the API-level bypass is transformWithState initialState onboarding,
+which needs a google.protobuf runtime that is not a project dependency
+— see ARCHITECTURE.md §3a-state.
 
 Round-11 addition (--cores-sweep): validate the "embarrassingly
 parallel" claim behind the 17-min extrapolation — run the
