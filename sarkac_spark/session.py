@@ -11,6 +11,8 @@ large cluster for the 100 TB target:
 - ``spark.sql.legacy.parquet.nanosAsLong``: the driver's ``events`` table
   carries TIMESTAMP(NANOS) which Spark's parquet reader otherwise rejects;
   we read it as a long and convert (see ``sources.tables``).
+- ``local[...]`` masters boot Python workers from ``worker_daemon``, with
+  this package on their PYTHONPATH (see that module for why).
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ from pyspark.sql import SparkSession
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -89,9 +93,18 @@ def get_spark(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             "true",
         )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        # Python workers share the driver's filesystem here: ship this
+        # package to them and boot them from the zipimport-caching daemon
+        # (see worker_daemon). On a cluster the package may be missing
+        # on executors, so the daemon stays pyspark's own.
+        paths = [_PACKAGE_PARENT, *extra_conf.pop(_WORKER_PYTHONPATH, "").split(os.pathsep)]
+        builder = builder.config(
+            _WORKER_PYTHONPATH, os.pathsep.join(dict.fromkeys(filter(None, paths)))
+        ).config("spark.python.daemon.module", "sarkac_spark.worker_daemon")
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -298,7 +298,8 @@ class SigmaStreamPipeline:
         emitted = self._apply_cooldown(anomalies)
         emitted.persist()
         try:
-            if emitted.limit(1).count() > 0:
+            n_emitted = emitted.count()
+            if n_emitted > 0:
                 # same per-epoch overwrite as the store: a replayed batch
                 # rewrites its own anomaly partition instead of appending
                 # duplicates (the state update is a max-merge — idempotent
@@ -315,13 +316,13 @@ class SigmaStreamPipeline:
                 # hook for subscribers (event bus): hand over THIS epoch's
                 # anomalies while they're still persisted — subscribers
                 # must never have to re-read the (unbounded) anomaly store
-                self._on_emitted(emitted, epoch_id)
+                self._on_emitted(emitted, epoch_id, n_emitted)
         finally:
             emitted.unpersist()
 
-    def _on_emitted(self, emitted: DataFrame, epoch_id: int) -> None:
+    def _on_emitted(self, emitted: DataFrame, epoch_id: int, total: int) -> None:
         """Called once per anomaly-producing epoch with that epoch's
-        emitted rows (persisted). Default: no-op."""
+        emitted rows (persisted) and their count. Default: no-op."""
 
     def compact_store(self) -> None:
         """Physical retention prune (S6) — rewrite the store keeping only

@@ -3,12 +3,18 @@ usage shape) and MLlib anomaly operators."""
 
 from __future__ import annotations
 
+import json
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
+from sarkac_spark.config import DSL
 from sarkac_spark.operators.mllib_anomaly import kmeans_anomaly
-from sarkac_spark.sarkac import Sarkac
+from sarkac_spark.sarkac import Sarkac, _discovery_tick
 from sarkac_spark.sources.synthetic import TOPIC, example_messages
+from sarkac_spark.streaming.discovery_loop import DiscoveryLoop
+from sarkac_spark.streaming.listener import EventBus, StatsCounters
 
 
 def test_sarkac_analyse_lifecycle(spark, tmp_path):
@@ -179,19 +185,44 @@ def test_facade_stateful_engine(spark, tmp_path):
     q.processAllAvailable()
     st = s.get_status()
     assert "storedEvents" not in st and st["stats"]["errors"] == 0
+    # listener delivery lags the query: wait while the listener is still
+    # attached, since close() drops any event not yet delivered
+    deadline = time.time() + 10
+    while time.time() < deadline and sum(counts) < 96:
+        time.sleep(0.2)
     s.close()
 
     rows = s.anomalies().collect()
     assert {r.value for r in rows if r.path == "sub.one"} == {150.5}
     assert {r.value for r in rows if r.path == "two"} == {-100.0}
-
-    import time
-
-    deadline = time.time() + 10
-    while time.time() < deadline and not counts:
-        time.sleep(0.2)
     assert sum(counts) >= 96
     assert s._listener is None  # close() detached the listener
+
+
+def test_discovery_tick_reports_topic_with_only_null_values(spark):
+    """The per-topic sample collect also lists the observed topics: a
+    topic whose every ``value`` is null is still created, and only the
+    topics with a sample reach field discovery."""
+    batch = spark.createDataFrame(
+        [("t", json.dumps({"x": 1.5})), ("t", json.dumps({"x": 2.5})), ("n", None), ("n", None)],
+        "topic string, value string",
+    )
+    sampled = []
+
+    class Loop(DiscoveryLoop):
+        def step_fields(self, topic, sample_payload):
+            sampled.append(topic)
+            return super().step_fields(topic, sample_payload)
+
+    loop = Loop(DSL.parse({}))
+    bus, counters = EventBus(), StatsCounters()
+    created = []
+    bus.on("created-topics", created.append)
+
+    assert _discovery_tick(batch, loop, bus, counters)
+    assert created == [["n", "t"]] and counters.topic_updates == 1
+    assert sampled == ["t"]
+    assert ("t", "x", 900) in loop.dsl.tasks()
 
 
 @pytest.mark.slow  # measured >=14 s in the r13 duration profile
