@@ -159,7 +159,6 @@ def online_sigma_scan(
     min_count: int = MIN_EVENTS_FOR_STATS,
     id_cols: Sequence[str] = ("event_id",),
     round_digits: int | None = 6,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-online sigma scan: each row is scored against the trailing
     stats of the *strictly earlier* points of its own series — the
@@ -269,11 +268,7 @@ def online_sigma_scan(
     # barrier: ``pref`` feeds the real-rows leg AND the probe leg; the
     # window pass (union + per-series sort + prefix sums — the
     # expensive stage) would otherwise run twice (r12).
-    # ``materialize=False`` skips it — the naked-plan mode the
-    # frame-shape assertions in test_plans.py inspect (a checkpoint
-    # hides the window subtree behind a LogicalRDD).
-    if materialize:
-        pref = pref.transform(lazy_checkpoint)
+    pref = pref.transform(lazy_checkpoint)
 
     rows = pref.filter("__is_real")
     probes = pref.filter(~F.col("__is_real")).select(

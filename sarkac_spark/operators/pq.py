@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from sarkac_spark.plans.audit import is_small_input, lazy_checkpoint
 
 # Seeded sf0.01 fit of fit_pq_codebooks(seed=7, maxIter=20) over the
 # driver embeddings, rounded to 4 decimals - the literal codebooks the
@@ -457,7 +456,7 @@ def pq_assign_long(
     per-vector cost is the inherent m x k x sub multiplies. The long
     form is what ADC joins consume, ``pq_assign`` pivots it for humans.
     ``carry`` columns pass through untouched — the seam that lets
-    ``ivfpq_store``/``ivfpq_topk`` keep the IVF bucket on the row and
+    ``ivfpq_store`` keep the IVF bucket on the row and
     derive (bucket, id, m, code) in ONE map-only corpus pass instead
     of shuffle-joining two separate corpus derivations (r12)."""
     # collapse the dim to ONE row per subspace (m, [(c, cent), ...]) so
@@ -617,7 +616,6 @@ def ivfpq_topk(
     n_queries: int = 10,
     k: int = 3,
     nprobe: int = 2,
-    small_input: bool | None = None,
 ) -> DataFrame:
     """The classic IVF-PQ layout (Jégou et al. §V): the IVF coarse
     quantizer prunes to ``nprobe`` buckets' candidates, then the PQ
@@ -627,85 +625,37 @@ def ivfpq_topk(
 
     Output: (query_id, neighbor_id, adist_micro, rank), k per query.
 
-    Two result-identical plan shapes, gated on input size
-    (``small_input=None`` derives it from ``df``'s backing files via
-    ``is_small_input``; pass the flag explicitly when ``df`` is already
-    behind a checkpoint and its file size is invisible):
-
-    - **Scale shape** (the default when size is unknown): ONE map-only
-      corpus pass computes the bucket argmax, a broadcast semi-join on
-      the union of probed buckets prunes the corpus BEFORE the PQ code
-      argmin runs — codes are only consumed for candidates, so
-      quantizing non-probed buckets was pure waste (guide §1.2). The
-      surviving fraction is (probed buckets / nlist); at a deployment
-      nlist the candidates are a vanishing corpus fraction, and code
-      assignment is the ROW-AMPLIFYING leg (m rows/vector through a
-      broadcast join + argmin HOF), so pruning first removes an
-      m x corpus row stream. Single corpus scan, broadcast-only joins,
-      no corpus-sized shuffle. Batch-size assumption: the semi-join
-      only pays off while n_queries x nprobe buckets stay well under
-      nlist; a batch large enough to probe every bucket makes it pure
-      plan weight (it still never changes results).
-    - **Small-input shape**: the two-scan plan (bucket pass + a
-      full-corpus code pass joined on the id). On toy corpora the
-      probed fraction is ~1 (10 queries x nprobe 2 cover all 8 toy
-      buckets) and the fused pass + probe checkpoint + semi machinery
-      cost more in sequential stages than the second scan they save —
-      measured r13 interleaved min-of-4 at sf0.1: two-scan 2.93 s vs
-      fused 3.90 s (ivfpq_topk), 5.7 s vs 6.78 s (text_ivfpq). At the
-      x100 generated corpus (~50-84 MB) the gap closes to a wash
-      (text_ivfpq 119.6 vs 119.4 s, BENCH_SCALE_R13_x100_c32.json) but
-      does NOT flip for these toy-nlist constants — the scale shape's
-      payoff needs a deployment nlist where the probed fraction is
-      small (the sqrt-n store arm in tools/bench_scale_decade.py
-      measures that regime), which is why unknown-size inputs default
-      to it while measurably-small ones do not.
+    Plan: two corpus passes — the bucket argmax and the PQ code argmin
+    — joined on the id, with the probes broadcast onto the bucket leg.
+    The r13 interleaved A/B measured this shape against a fused
+    bucket+code pass behind a broadcast semi-join on the probed-bucket
+    union, and it won or tied at every generated size (``ivfpq_topk``
+    sf0.1 2.45 vs 2.71 s, x10 13.3 vs 14.6 s, x100 126.6 vs 145.8 s):
+    at this query's fixed nlist the probes cover nearly every bucket,
+    so there is nothing for the semi-join to prune. The fused pass pays
+    off only when the probed fraction is small, i.e. at a deployment
+    nlist over a prebuilt index — ``ivfpq_store``/``ivfpq_query_store``
+    (the sqrt-n arm in tools/bench_scale_decade.py measures that).
     """
     from sarkac_spark.operators.similarity import assign_buckets
 
-    if small_input is None:
-        small_input = is_small_input(df)
     queries = df.filter(F.col(id_col) < n_queries)
-    if small_input:
-        corpus_b = assign_buckets(df, centroids, id_col, vec_col, n_best=1).select(
-            F.col(id_col), F.col("bucket")
-        )
-        probes = assign_buckets(
-            queries, centroids, id_col, vec_col, n_best=nprobe
-        ).select(F.col(id_col).alias("query_id"), "bucket")
-        # no distinct needed: each corpus vector lives in exactly ONE
-        # bucket (n_best=1) and a query's probed buckets are distinct,
-        # so a (query, candidate) pair can only arise once
-        cand = (
-            corpus_b.join(F.broadcast(probes), "bucket")
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select("query_id", id_col)
-        )
-        codes = pq_assign_long(df, codebooks, id_col, vec_col)
-        cand_codes = cand.join(codes, id_col).select(
-            "query_id", id_col, "m", "code"
-        )
-    else:
-        # probes is referenced twice (the semi-join's distinct-bucket
-        # build side and the query-attach join); it is |queries| x
-        # nprobe rows, so materialize it once rather than re-running
-        # its scan+window subtree per consumer (the wave-1
-        # shared-subtree rule, at probe size)
-        probes = (
-            assign_buckets(queries, centroids, id_col, vec_col, n_best=nprobe)
-            .select(F.col(id_col).alias("query_id"), "bucket")
-            .transform(lazy_checkpoint)
-        )
-        cand = assign_buckets(df, centroids, id_col, vec_col, n_best=1).join(
-            F.broadcast(probes.select("bucket").distinct()), "bucket", "semi"
-        )
-        codes_b = pq_assign_long(cand, codebooks, id_col, "vec", carry=("bucket",))
-        # (same no-distinct argument as the small branch)
-        cand_codes = (
-            codes_b.join(F.broadcast(probes), "bucket")
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select("query_id", id_col, "m", "code")
-        )
+    corpus_b = assign_buckets(df, centroids, id_col, vec_col, n_best=1).select(
+        F.col(id_col), F.col("bucket")
+    )
+    probes = assign_buckets(
+        queries, centroids, id_col, vec_col, n_best=nprobe
+    ).select(F.col(id_col).alias("query_id"), "bucket")
+    # no distinct needed: each corpus vector lives in exactly ONE
+    # bucket (n_best=1) and a query's probed buckets are distinct,
+    # so a (query, candidate) pair can only arise once
+    cand = (
+        corpus_b.join(F.broadcast(probes), "bucket")
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select("query_id", id_col)
+    )
+    codes = pq_assign_long(df, codebooks, id_col, vec_col)
+    cand_codes = cand.join(codes, id_col).select("query_id", id_col, "m", "code")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -802,8 +752,8 @@ def ivfpq_store(
     --scaled-nlist, BASELINE.md §d)."""
     from sarkac_spark.operators.similarity import assign_buckets
 
-    # fused bucket+code pass (see ivfpq_topk): ONE corpus scan, no
-    # corpus-sized shuffle join re-attaching codes to buckets
+    # fused bucket+code pass: ONE corpus scan, no corpus-sized
+    # shuffle join re-attaching codes to buckets
     return pq_assign_long(
         assign_buckets(df, centroids, id_col, vec_col, n_best=1),
         codebooks,
@@ -822,7 +772,6 @@ def ivfpq_query_store(
     vec_col: str = "embedding",
     k: int = 3,
     nprobe: int = 2,
-    prune_partitions: bool = True,
 ) -> DataFrame:
     """ADC top-k over a MATERIALIZED ``ivfpq_store`` relation — the
     query path that never touches a raw corpus vector OR rebuilds the
@@ -831,10 +780,10 @@ def ivfpq_query_store(
     ``ivfpq_topk`` on the same corpus/queries/centroids (pinned in
     tests/test_pq.py).
 
-    ``prune_partitions`` collects the probed bucket ids to the driver —
+    The probed bucket ids are collected to the driver —
     nprobe x |queries| values, tens of rows, bounded by contract (the
-    ``ivf_refit_decision`` 1-row-collect precedent) — and applies them
-    as an ``isin`` literal filter, so a bucket-partitioned parquet
+    ``ivf_refit_decision`` 1-row-collect precedent) — and applied as
+    an ``isin`` literal filter, so a bucket-partitioned parquet
     store PRUNES to the probed partitions at the scan: bytes read are
     ~nprobe/nlist of the index, the whole point of IVF at 100 TB."""
     from sarkac_spark.operators.similarity import assign_buckets
@@ -842,9 +791,8 @@ def ivfpq_query_store(
     probes = assign_buckets(
         queries, centroids, id_col, vec_col, n_best=nprobe
     ).select(F.col(id_col).alias("query_id"), "bucket")
-    if prune_partitions:
-        probed = [r.bucket for r in probes.select("bucket").distinct().collect()]
-        store = store.filter(F.col("bucket").isin(probed))
+    probed = [r.bucket for r in probes.select("bucket").distinct().collect()]
+    store = store.filter(F.col("bucket").isin(probed))
     cand = (
         store.join(F.broadcast(probes), "bucket")
         .filter(F.col(id_col) != F.col("query_id"))

@@ -647,8 +647,12 @@ def refit_ivf_centroids(
     Training is capped at ``max_train_rows`` via ``hash_sample`` (row-
     content-deterministic, replay-safe — k centroids over a sample are
     statistically the centroids of the corpus, the ``kmeans_anomaly``
-    argument); the fit input is coalesced + persisted for the iteration
-    loop. Iterative ⇒ rows-only tier, like every MLlib fit here.
+    argument); the fit input is hash-partitioned by ``id_col`` into 8
+    id-sorted partitions + persisted for the iteration loop. KMeans||
+    seeds its sampling per partition, so a layout set by the rows'
+    content (not by the corpus's file layout or the core count) is what
+    makes the fit reproduce the same centers anywhere. Iterative ⇒
+    rows-only tier, like every MLlib fit here.
 
     Output: (centroid_id long, ``vec_col`` array<double>) — drop-in for
     ``assign_buckets`` / ``ivf_topk`` / ``ivf_bucket_stats``.
@@ -662,10 +666,16 @@ def refit_ivf_centroids(
     train = corpus
     if max_train_rows and n_rows > max_train_rows:
         train = hash_sample(corpus, id_col, max_train_rows / n_rows, salt=salt)
-    feats = train.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("__features")
+    feats = (
+        train.repartition(8, id_col)
+        .sortWithinPartitions(id_col)
+        .select(
+            array_to_vector(F.col(vec_col).cast("array<double>")).alias(
+                "__features"
+            )
+        )
+        .persist()
     )
-    feats = feats.coalesce(8).persist()
     try:
         model = KMeans(
             k=n_buckets, seed=seed, maxIter=max_iter, featuresCol="__features"

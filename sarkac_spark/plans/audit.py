@@ -56,16 +56,14 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
-# Default floor for the size-gated plan shapes (see input_size_bytes):
-# below this, a query takes its overhead-light small-input branch; at or
-# above (or when the size is unknowable — non-file source, checkpointed
-# input), it takes the scale shape. 64 MB sits an order of magnitude
-# above the ~6 MB x100 documents corpus where the r13 interleaved A/B
-# still favored the small-input shapes, and far below any input where
-# an extra corpus scan could matter (a scan is ~seconds at 64 MB,
-# hours at 100 TB). Override per session with
-# spark.conf.set("spark.sarkac.smallInputBytes", ...) or the
-# SARKAC_SMALL_INPUT_BYTES env var.
+# Floor for the size-gated plan shape (see input_size_bytes); its only
+# consumer is dedup_minhash's doc-aggregate barrier: below the floor the
+# barrier is off, at or above it (or when the size is unknowable —
+# non-file source, checkpointed input) it is on. 64 MB sits between the
+# ~7 MB x10 documents corpus, where the r13 interleaved A/B measured the
+# barrier 1.6x slower, and the ~84 MB x100 corpus, where it was back to
+# a wash (OPTIMIZATION_r13.md §3); far below any input where an extra
+# corpus scan could matter (a scan is ~seconds at 64 MB, hours at 100 TB).
 SMALL_INPUT_BYTES = 64 * 1024 * 1024
 
 
@@ -93,25 +91,11 @@ def input_size_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def is_small_input(df: DataFrame, threshold: int | None = None) -> bool:
-    """Size gate for dual-shape operators: True iff ``df``'s backing
-    files are measurably smaller than the small-input floor. The floor
-    is ``spark.sarkac.smallInputBytes`` (session conf) falling back to
-    ``$SARKAC_SMALL_INPUT_BYTES`` then ``SMALL_INPUT_BYTES``."""
-    if threshold is None:
-        try:
-            threshold = int(
-                df.sparkSession.conf.get(
-                    "spark.sarkac.smallInputBytes",
-                    os.environ.get(
-                        "SARKAC_SMALL_INPUT_BYTES", str(SMALL_INPUT_BYTES)
-                    ),
-                )
-            )
-        except Exception:  # noqa: BLE001
-            threshold = SMALL_INPUT_BYTES
+def is_small_input(df: DataFrame) -> bool:
+    """Size gate: True iff ``df``'s backing files are measurably smaller
+    than ``SMALL_INPUT_BYTES``."""
     size = input_size_bytes(df)
-    return size is not None and size < threshold
+    return size is not None and size < SMALL_INPUT_BYTES
 
 
 def _ckpt_children_text(df: DataFrame) -> str:

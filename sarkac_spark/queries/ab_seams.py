@@ -2,13 +2,13 @@
 
 This box's wall clock drifts 1.2-1.7x within a session on PINNED plans,
 so a cross-window total can mislabel a good plan as a regression. For
-queries that carry an explicit dual-shape seam (a size gate or a
-barrier flag), the only locally valid perf evidence is running BOTH
-shapes interleaved in ONE process. ``bench.py`` does that when
-``SPARK_GRAFT_AB=1`` and writes the rows under ``"ab"`` in the local
-record file — never into the driver-facing ``queries`` map (the
-variants are measurement probes, not registered queries, and both
-variants of a seam compute identical results by construction).
+queries that carry an explicit dual-shape seam (a size-gated barrier),
+the only locally valid perf evidence is running BOTH shapes interleaved
+in ONE process. ``bench.py`` does that when ``SPARK_GRAFT_AB=1`` and
+writes the rows under ``"ab"`` in the local record file — never into
+the driver-facing ``queries`` map (the variants are measurement probes,
+not registered queries, and both variants of a seam compute identical
+results by construction — pinned in tests/test_ab_seams.py).
 
 Each entry: query name -> {variant label -> builder(spark, sf_dir)}.
 The variant named like the registered query's current branch at the
@@ -25,27 +25,6 @@ from pyspark.sql import DataFrame
 
 def ab_variants() -> dict[str, dict[str, Callable[..., DataFrame]]]:
     from sarkac_spark.queries.llm import QUERIES
-    from sarkac_spark.queries.llm_curation import q_curation_funnel
-    from sarkac_spark.queries.llm_retrieval import q_text_ivfpq
-
-    def ivfpq(small):
-        def fn(spark, sf_dir):
-            from sarkac_spark.operators.pq import PQ_CODEBOOKS, ivfpq_topk
-            from pyspark.sql import functions as F
-            from sarkac_spark.queries.llm_common import (
-                N_CENTROIDS, N_QUERIES, TOPK, _embs,
-            )
-
-            e = _embs(spark, sf_dir)
-            centroids = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-                F.col("vec_id").alias("centroid_id"), "embedding"
-            )
-            return ivfpq_topk(
-                e, PQ_CODEBOOKS, centroids, id_col="vec_id",
-                n_queries=N_QUERIES, k=TOPK, nprobe=2, small_input=small,
-            )
-
-        return fn
 
     def minhash(barrier):
         def fn(spark, sf_dir):
@@ -63,25 +42,12 @@ def ab_variants() -> dict[str, dict[str, Callable[..., DataFrame]]]:
 
         return fn
 
-    # sanity: the seams must shadow live registry entries
-    for name in ("ivfpq_topk", "text_ivfpq", "dedup_minhash", "curation_funnel"):
-        assert name in QUERIES, name
+    # sanity: the seam must shadow a live registry entry
+    assert "dedup_minhash" in QUERIES
 
     return {
-        "ivfpq_topk": {
-            "two_scan_small": ivfpq(True),
-            "fused_semi_scale": ivfpq(False),
-        },
-        "text_ivfpq": {
-            "two_scan_small": lambda s, d: q_text_ivfpq(s, d, small_input=True),
-            "fused_semi_scale": lambda s, d: q_text_ivfpq(s, d, small_input=False),
-        },
         "dedup_minhash": {
             "sig_barrier": minhash(True),
             "no_barrier": minhash(False),
-        },
-        "curation_funnel": {
-            "stage_barriers": lambda s, d: q_curation_funnel(s, d, stage_barriers=True),
-            "no_barriers": lambda s, d: q_curation_funnel(s, d, stage_barriers=False),
         },
     }

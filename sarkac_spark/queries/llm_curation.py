@@ -357,7 +357,7 @@ CURATION_FUNNEL_CONFIG = {
 }
 
 
-def q_curation_funnel(spark, sf_dir, stage_barriers: bool = True):
+def q_curation_funnel(spark, sf_dir):
     """Curator.report() as an oracle-checked query: the per-stage
     survivor funnel of a full curation pass (gopher+classifier quality
     gate → exact+MinHash dedup → per-source quota), one row per stage
@@ -388,11 +388,9 @@ def q_curation_funnel(spark, sf_dir, stage_barriers: bool = True):
         # Known-benign noise: later rebuilds in the same session log
         # "ERROR DAGScheduler: Failed to update accumulator" from the
         # checkpointed stages — results unaffected (oracle green).
-        # (stage_barriers=False is the A/B seam bench.py's
-        # SPARK_GRAFT_AB hook measures — results identical either way)
-        d = fn(d)
-        if stage_barriers:
-            d = d.transform(lazy_checkpoint)
+        # Measured r13 interleaved against the barrier-free plan: sf0.1
+        # 3.23 vs 4.37 s, x10 10.0 vs 17.6 s, x100 61.9 vs 155.4 s.
+        d = fn(d).transform(lazy_checkpoint)
         frames.append(
             d.agg(
                 F.lit(f"{i}_{name}").alias("stage"),

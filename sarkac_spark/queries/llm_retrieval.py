@@ -171,7 +171,7 @@ FROM shares
 """
 
 
-def q_text_ivfpq(spark, sf_dir, small_input: bool | None = None):
+def q_text_ivfpq(spark, sf_dir):
     """Raw-text retrieval END-TO-END (round-6 ask #5): documents →
     hash_embed (deterministic, no encoder) → fit-free IVF coarse
     buckets (the first N docs' vectors as centroids, the vec_id<8
@@ -183,7 +183,6 @@ def q_text_ivfpq(spark, sf_dir, small_input: bool | None = None):
     tests/test_pq.py."""
     from sarkac_spark.operators.pq import TEXT_PQ_CODEBOOKS, ivfpq_topk
     from sarkac_spark.operators.text import hash_embed
-    from sarkac_spark.plans.audit import is_small_input
 
     # lazy checkpoint: ivfpq_topk derives corpus buckets, PQ codes and
     # queries from the SAME relation, and the centroid dim filters it
@@ -193,10 +192,9 @@ def q_text_ivfpq(spark, sf_dir, small_input: bool | None = None):
     # already evaluated it logs "ERROR DAGScheduler: Failed to update
     # accumulator" — stale accumulators from the checkpointed stage;
     # results are unaffected (oracle stays green). Not a defect.
-    docs = _docs(spark, sf_dir)
-    emb = hash_embed(docs, "doc_id", "text", dim=EMB_DIM).transform(
-        lazy_checkpoint
-    )
+    emb = hash_embed(
+        _docs(spark, sf_dir), "doc_id", "text", dim=EMB_DIM
+    ).transform(lazy_checkpoint)
     centroids = emb.filter(F.col("doc_id") < N_CENTROIDS).select(
         F.col("doc_id").alias("centroid_id"), "embedding"
     )
@@ -208,10 +206,6 @@ def q_text_ivfpq(spark, sf_dir, small_input: bool | None = None):
         n_queries=N_QUERIES,
         k=TOPK,
         nprobe=2,
-        # the emb checkpoint hides the parquet files from ivfpq_topk's
-        # own size probe, so gate on the docs scan explicitly (the
-        # corpus IS one vector per doc); the keyword is the A/B seam
-        small_input=is_small_input(docs) if small_input is None else small_input,
     )
 
 

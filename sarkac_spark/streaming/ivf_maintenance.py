@@ -28,11 +28,10 @@ current centroids" without ever rescanning on the NON-refit path.
 
 Exactly-once under at-least-once replay, same discipline as
 ``IncrementalDedupPipeline`` — every epoch-keyed write is a per-epoch
-overwrite and the refit is deterministic FOR A GIVEN STORE LAYOUT
-(seeded KMeans over the stored files — a replay reads the same files in
-the same layout, so it re-derives the same centers; only a physically
-repartitioned store could fit differently) — plus two refit-specific
-rules:
+overwrite and the refit is deterministic (seeded KMeans over an
+id-hash-partitioned, id-sorted copy of the stored rows — a replay
+re-derives the same centers whatever the store's file layout or the
+core count) — plus two refit-specific rules:
 
 - the CENTROIDS write is last (the commit point): a crash anywhere
   before it replays under the OLD version, re-derives the identical

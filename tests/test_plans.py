@@ -98,11 +98,12 @@ def test_top_customers_uses_distributed_topk(spark, sf_dir):
 
 def test_online_sigma_uses_no_sliding_frames(events):
     from sarkac_spark.operators.anomaly import online_sigma_scan
+    from sarkac_spark.plans.audit import resolved_plan
 
-    # materialize=False: the naked plan (the r12 lazy checkpoint that
-    # runs the window pass once per action would otherwise hide the
-    # window subtree behind a LogicalRDD scan)
-    plan = _plan(online_sigma_scan(events, window_seconds=86400, materialize=False))
+    # resolved_plan: the window pass sits behind the r12 lazy checkpoint
+    # (it runs once per action), which the executed plan shows only as
+    # an ExistingRDD scan; the resolved text includes its subtree
+    plan = resolved_plan(online_sigma_scan(events, window_seconds=86400))
     # the trailing stats must come from add-only (unboundedpreceding)
     # prefix frames — Spark re-scans sliding RANGE frames per row,
     # which is O(rows x frame) and collapses at scale
@@ -110,9 +111,10 @@ def test_online_sigma_uses_no_sliding_frames(events):
     lowered = plan.lower()
     import re
 
-    # a sliding frame renders as "range between -N ... and -1" (both
-    # bounds finite) — forbid it
-    assert not re.search(r"range between -\d+", lowered)
+    # a sliding frame (finite lower bound) renders as
+    # "specifiedwindowframe(RangeFrame, -N, -1)" in the physical plan
+    # ("range between -N ..." in SQL text) — forbid both
+    assert not re.search(r"range(?:frame,| between) -\d+", lowered)
 
 
 def test_skew_report_no_global_sort(spark, sf_dir):

@@ -132,13 +132,10 @@ def test_pq_recall_floor(spark, sf_dir):
     assert mean >= 0.1
 
 
-@pytest.mark.parametrize("small", [True, False])
-def test_ivfpq_candidates_are_bucket_pruned(spark, sf_dir, small):
+def test_ivfpq_candidates_are_bucket_pruned(spark, sf_dir):
     """IVF-PQ returns a subset of the probed buckets' members, ranked by
     the SAME ADC distance pq_adc_topk would give them — pruning changes
-    the candidate set, never the distance arithmetic. Both size-gate
-    branches (r13: two-scan small-input shape, fused+semi scale shape)
-    are pinned."""
+    the candidate set, never the distance arithmetic."""
     from sarkac_spark.operators.pq import ivfpq_topk, pq_adc_topk
     from sarkac_spark.operators.similarity import assign_buckets
     from sarkac_spark.sources.tables import load_table
@@ -147,10 +144,7 @@ def test_ivfpq_candidates_are_bucket_pruned(spark, sf_dir, small):
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    got = ivfpq_topk(
-        emb, PQ_CODEBOOKS, cents, n_queries=3, k=3, nprobe=2,
-        small_input=small,
-    )
+    got = ivfpq_topk(emb, PQ_CODEBOOKS, cents, n_queries=3, k=3, nprobe=2)
     rows = got.collect()
     assert {r.query_id for r in rows} <= {0, 1, 2}
     # every returned neighbor's ADC distance equals the unpruned one
@@ -178,14 +172,11 @@ def test_ivfpq_candidates_are_bucket_pruned(spark, sf_dir, small):
         assert corpus_b[r.neighbor_id] in probes[r.query_id]
 
 
-@pytest.mark.parametrize("small", [True, False])
-def test_ivfpq_topk_matches_bruteforce_over_probed_buckets(spark, sf_dir, small):
-    """r12 wave 6 pins: pruning PQ coding to the probed buckets' union
-    (the candidates-first semi-join) loses no candidate — the operator's
-    output equals, rank for rank, the brute-force ranking of exactly
-    {probed-bucket members minus self} by the UNPRUNED ADC distance with
-    the house (distance, id) tie-break. Parametrized over the r13 size
-    gate so BOTH plan shapes keep this completeness contract."""
+def test_ivfpq_topk_matches_bruteforce_over_probed_buckets(spark, sf_dir):
+    """Bucket pruning loses no candidate — the operator's output equals,
+    rank for rank, the brute-force ranking of exactly {probed-bucket
+    members minus self} by the UNPRUNED ADC distance with the house
+    (distance, id) tie-break."""
     from sarkac_spark.operators.pq import ivfpq_topk, pq_adc_topk
     from sarkac_spark.operators.similarity import assign_buckets
     from sarkac_spark.sources.tables import load_table
@@ -197,10 +188,7 @@ def test_ivfpq_topk_matches_bruteforce_over_probed_buckets(spark, sf_dir, small)
     k = 3
     got = [
         (r.query_id, r.rank, r.neighbor_id, r.adist_micro)
-        for r in ivfpq_topk(
-            emb, PQ_CODEBOOKS, cents, n_queries=3, k=k, nprobe=2,
-            small_input=small,
-        )
+        for r in ivfpq_topk(emb, PQ_CODEBOOKS, cents, n_queries=3, k=k, nprobe=2)
         .orderBy("query_id", "rank")
         .collect()
     ]
@@ -334,8 +322,8 @@ def test_pq_distortion_is_the_refit_trend_signal(spark, sf_dir):
 def test_ivfpq_store_query_equals_on_the_fly(spark, sf_dir, tmp_path):
     """ivfpq_query_store over a materialized (and bucket-partitioned)
     ivfpq_store == ivfpq_topk re-deriving the index in one plan — same
-    rows, bit for bit. Partition pruning on the probed buckets must not
-    change results (with or without the literal isin filter)."""
+    rows, bit for bit, with the store scan pruned to the probed
+    buckets' partitions."""
     from sarkac_spark.operators.pq import (
         PQ_CODEBOOKS,
         ivfpq_query_store,
@@ -359,56 +347,16 @@ def test_ivfpq_store_query_equals_on_the_fly(spark, sf_dir, tmp_path):
     ).parquet(path)
     store = spark.read.parquet(path)
     queries = e.filter(F.col("vec_id") < 10)
-    for prune in (True, False):
-        got = sorted(
-            map(tuple, ivfpq_query_store(
-                store, queries, centroids, PQ_CODEBOOKS,
-                k=3, nprobe=2, prune_partitions=prune,
-            ).collect())
-        )
-        assert got == expected
+    got_df = ivfpq_query_store(store, queries, centroids, PQ_CODEBOOKS, k=3, nprobe=2)
+    assert sorted(map(tuple, got_df.collect())) == expected
 
-    # the pruned plan actually prunes: the store scan must carry a
-    # NON-EMPTY PartitionFilters clause referencing the bucket column
+    # the plan actually prunes: the store scan must carry a NON-EMPTY
+    # PartitionFilters clause referencing the bucket column
     # ("PartitionFilters: []" would mean the isin literal was lost and
     # the whole index is scanned)
     import re
 
-    probed_plan = ivfpq_query_store(
-        store, queries, centroids, PQ_CODEBOOKS, k=3, nprobe=2
-    )._jdf.queryExecution().executedPlan().toString()
+    probed_plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*bucket", probed_plan), (
         probed_plan[:4000]
     )
-
-
-def test_ivfpq_size_gate_branches(spark, sf_dir):
-    """The r13 input-size gate: toy parquet inputs take the two-scan
-    small-input branch (no probes checkpoint in the plan), forcing
-    small_input=False takes the fused+semi scale branch (probes behind
-    an ExistingRDD checkpoint), and the derived default at sf0.001
-    equals the small branch — with identical results from both."""
-    from sarkac_spark.operators.pq import ivfpq_topk
-    from sarkac_spark.plans.audit import executed_plan, is_small_input
-    from sarkac_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assert is_small_input(emb)  # ~KBs of parquet vs the 64 MB floor
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    kw = dict(n_queries=3, k=3, nprobe=2)
-    small = ivfpq_topk(emb, PQ_CODEBOOKS, cents, small_input=True, **kw)
-    scale = ivfpq_topk(emb, PQ_CODEBOOKS, cents, small_input=False, **kw)
-    auto = ivfpq_topk(emb, PQ_CODEBOOKS, cents, **kw)
-    # plan shapes: the scale branch prunes the corpus with a broadcast
-    # LeftSemi on the probed-bucket union before coding; the small
-    # branch has no semi-join anywhere (the codebook dims appear as
-    # ExistingRDD scans in BOTH branches, so the semi is the
-    # discriminator)
-    assert "LeftSemi" in executed_plan(scale)
-    assert "LeftSemi" not in executed_plan(small)
-    # the derived gate picks the small branch on toy inputs
-    assert "LeftSemi" not in executed_plan(auto)
-    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert rows(small) == rows(scale) == rows(auto)

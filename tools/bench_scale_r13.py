@@ -14,7 +14,7 @@ digests — so the committed record carries:
 - optional interleaved seam A/B rows (--ab: both shapes of each
   dual-shape query from sarkac_spark.queries.ab_seams, alternating in
   THIS process so the box's session drift cancels) — the crossover
-  evidence for the r13 size gates.
+  evidence for the dedup_minhash size gate.
 
 One invocation = one core count (the session master is fixed at
 creation; run again with SPARK_GRAFT_CPUS=8 and merge):
@@ -40,8 +40,8 @@ sys.path.insert(0, os.path.dirname(HERE))
 sys.path.insert(0, HERE)
 
 # barrier-bearing hot set (documents/embeddings-backed — the generator
-# only produces those tables): the wave-1/3/4/5 barrier sites, the two
-# r13 size-gated queries, the sketch-aggregate proxies, and the
+# only produces those tables): the wave-1/3/4/5 barrier sites, the
+# IVF-PQ queries, the sketch-aggregate proxies, and the
 # graph/clusters family (VERDICT r12 #7 profiling).
 QUERIES = [
     "dedup_minhash", "dedup_simhash", "minhash_recall", "decontamination",
