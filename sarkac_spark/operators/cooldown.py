@@ -12,16 +12,15 @@ Two implementations:
   semantics of ``dropDuplicatesWithinWatermark`` in the streaming lift.
   Differs from the reference only when anomalies straddle a bucket edge
   within 120 s of each other.
-- ``cooldown_exact``: the reference's exact sequential semantics via
-  ``applyInPandas`` per key (anomalies are rare, so per-key groups are
-  tiny; the fact stream never passes through Python).
+- ``cooldown_exact``: the reference's exact sequential semantics as a
+  JVM walk per key, optionally seeded with each key's last emit (the
+  foreachBatch engine seeds it from its anomaly sink's earlier epochs).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from sarkac_spark.config import ANOMALY_COOLDOWN_SECONDS
@@ -62,21 +61,33 @@ def cooldown_exact(
     key_cols: Sequence[str],
     ts_col: str,
     cooldown_seconds: int = ANOMALY_COOLDOWN_SECONDS,
+    seed: DataFrame | None = None,
 ) -> DataFrame:
     """Reference-exact emit-then-suppress: scan each key's anomalies in
     time order; emit one, drop everything in the next ``cooldown`` window,
-    emit the next survivor, repeat."""
-    schema = anomalies.schema
-    cd = pd.Timedelta(seconds=cooldown_seconds)
+    emit the next survivor, repeat. ``seed`` (``key_cols`` +
+    ``last_emit_us``, epoch micros) starts a key's clock at an earlier
+    emit; unseeded keys start fresh.
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        keep = []
-        last = None
-        for i, t in zip(pdf.index, pdf[ts_col]):
-            if last is None or (t - last) >= cd:
-                keep.append(i)
-                last = t
-        return pdf.loc[keep]
+    One JVM pass per key: its rows, sorted by (ts, then every column, so
+    ties break the same way on every run), are walked by ``aggregate``
+    carrying (last emit, kept rows). Appending to the kept array costs
+    O(k^2) in k, the key's anomalies per call: fine while anomalies are
+    rare (the streaming engine's k is capped by ``maxOffsetsPerTrigger``)."""
+    cols = anomalies.columns
+    row = F.struct(_epoch_us(anomalies, ts_col).alias("__t"), *cols)
+    rows = anomalies.groupBy(*key_cols).agg(F.array_sort(F.collect_list(row)).alias("__rows"))
+    last = F.lit(None).cast("long")
+    if seed is not None:
+        rows = rows.join(seed.select(*key_cols, "last_emit_us"), list(key_cols), "left")
+        last = F.col("last_emit_us")
+    cd_us = cooldown_seconds * 1_000_000
 
-    return anomalies.groupBy(*key_cols).applyInPandas(scan, schema=schema)
+    def step(acc, x):
+        emit = acc["last"].isNull() | (x["__t"] - acc["last"] >= cd_us)
+        taken = F.struct(x["__t"].alias("last"), F.concat(acc["kept"], F.array(x)).alias("kept"))
+        return F.when(emit, taken).otherwise(acc)
+
+    start = F.struct(last.alias("last"), F.filter("__rows", lambda x: F.lit(False)).alias("kept"))
+    kept = F.explode(F.aggregate("__rows", start, step, lambda acc: acc["kept"]))
+    return rows.select(kept.alias("__r")).select(*[F.col("__r")[c].alias(c) for c in cols])

@@ -258,17 +258,19 @@ class Sarkac:
             self._listener = None
 
 
-def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> bool:
+def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> tuple[bool, int]:
     """One discovery tick over a micro-batch (reference Discovery.js:38-66
     samples on a timer; per-micro-batch is the same cadence contract since
     the trigger period is the clock here). Driver-side cost: one collect
-    of one sampled message per topic, which also lists the observed
-    topics (a topic whose sample is null still gets its row) — bounded
-    by topic count, not batch size. Returns True when the merged DSL
-    changed (DiscoveryLoop fires ``on_dsl_change`` itself)."""
+    of one sampled message and the message count per topic, which also
+    lists the observed topics (a topic whose sample is null still gets
+    its row) — bounded by topic count, not batch size. Returns whether
+    the merged DSL changed (DiscoveryLoop fires ``on_dsl_change`` itself)
+    and the batch's message count."""
     from pyspark.sql import functions as F
 
-    samples = batch.groupBy("topic").agg(F.first("value").alias("value")).collect()
+    by_topic = batch.groupBy("topic").agg(F.first("value").alias("value"), F.count("*").alias("n"))
+    samples = by_topic.collect()
     created, deleted = discovery.step_topics(
         sorted({r.topic for r in samples} | set(discovery.known_topics))
     )
@@ -281,7 +283,7 @@ def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> bool:
     for r in samples:
         if r.value is not None and discovery.step_fields(r.topic, r.value):
             changed = True
-    return changed
+    return changed, sum(r.n for r in samples)
 
 
 class _BusSigmaPipeline(SigmaStreamPipeline):
@@ -312,31 +314,12 @@ class _BusSigmaPipeline(SigmaStreamPipeline):
         self.counters = counters
         self.discovery = discovery
 
-    def _discover(self, batch: DataFrame) -> None:
-        """Per-batch discovery tick — shared ``_discovery_tick`` logic;
-        on change the next batch re-plans extraction with the merged DSL
-        (no restart needed in the foreachBatch engine)."""
-        if _discovery_tick(batch, self.discovery, self.bus, self.counters):
-            self.dsl = self.discovery.dsl
-
-    # Bus-emission cap per epoch: an anomaly STORM (e.g. a stddev~0
-    # series where every point scores as anomalous) would otherwise
-    # collect an unbounded frame onto the driver. The earliest
-    # `anomaly_emit_cap` rows (event-time order) reach the bus; the rest
-    # are counted in `anomalies_dropped` (visible in /status) — the
-    # full set is already persisted in the anomaly store either way,
-    # the bus is an observability tap, not the data path.
-    anomaly_emit_cap = 1000
-
-    def _on_emitted(self, emitted: DataFrame, epoch_id: int, total: int) -> None:
-        """Surface THIS epoch's ``total`` anomalies on the bus. The frame
-        is the already-persisted per-epoch cooldown output — the collect
-        is bounded by ``anomaly_emit_cap`` regardless of the batch's
-        anomaly count (round-6 judge ask: storms must not grow the
-        driver heap), unlike the round-1 shape that re-read and
-        collected the entire anomaly directory every anomaly-producing
-        batch."""
-        rows = emitted.orderBy("event_ts_us").limit(self.anomaly_emit_cap).collect()
+    def _on_emitted(self, rows: list, epoch_id: int, total: int) -> None:
+        """Surface THIS epoch's ``total`` anomalies on the bus: the
+        earliest ``anomaly_emit_cap`` rows (event-time order) reach it,
+        the rest are counted in ``anomalies_dropped`` (visible in
+        /status) — the bus is an observability tap, not the data path,
+        and a storm must not grow the driver heap."""
         for r in rows:
             self.bus.emit("anomaly", r.asDict())
         self.counters.anomalies_detected += total
@@ -345,9 +328,14 @@ class _BusSigmaPipeline(SigmaStreamPipeline):
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         batch = batch.persist()
         try:
-            n_msgs = batch.count()
-            if self.discovery is not None:
-                self._discover(batch)
+            if self.discovery is None:
+                n_msgs = batch.count()
+            else:
+                # on change the next batch re-plans extraction with the
+                # merged DSL (no restart needed in the foreachBatch engine)
+                changed, n_msgs = _discovery_tick(batch, self.discovery, self.bus, self.counters)
+                if changed:
+                    self.dsl = self.discovery.dsl
             super().process_batch(batch, epoch_id)
             self.counters.scan_runs += 1
             self.counters.analysed_messages += n_msgs

@@ -12,8 +12,10 @@ Spark-first, both collapse into ONE micro-batch loop —
       3. recompute trailing stats from the retained store  (A1-A3, A5)
       4. score the *batch* rows against those stats        (P6)
       5. cooldown-suppress per (topic, path, window)       (W6, exact
-         emit-then-suppress semantics, seeded from persisted state)
-      6. append anomalies           (-> Kafka sink shape / parquet)
+         emit-then-suppress as a JVM walk, seeded with each series'
+         last emit from the anomaly sink's earlier epochs — the sink IS
+         the cooldown state; there is no state dir)
+      6. overwrite this epoch's anomaly partition (-> Kafka sink shape)
 
 This gives exact trailing-window-from-"now" semantics (the reference's
 ``Date.now()`` boundary, SigmaModel.js:54) rather than Spark's aligned
@@ -43,8 +45,7 @@ import shutil
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from sarkac_spark.config import (
     ANOMALY_COOLDOWN_SECONDS,
@@ -53,6 +54,7 @@ from sarkac_spark.config import (
     DSL,
 )
 from sarkac_spark.operators.anomaly import sigma_scan
+from sarkac_spark.operators.cooldown import cooldown_exact
 from sarkac_spark.operators.fields import dsl_field_exprs, to_sigma_store
 from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
 
@@ -60,7 +62,15 @@ STORE_SCHEMA = "topic string, produced timestamp, key string, field_path string,
 # epoch is a partition directory (epoch=N/topic=T/part-*.parquet): the
 # per-micro-batch idempotency unit — see process_batch step 2
 STORE_READ_SCHEMA = "epoch long, " + STORE_SCHEMA
-STATE_SCHEMA = "topic string, path string, window_seconds long, last_emit_us long"
+# the anomaly sink's columns the cooldown seed needs (epoch=N partitions)
+SINK_READ_SCHEMA = "epoch long, topic string, path string, window_seconds long, event_ts_us long"
+SERIES = ("topic", "path", "window_seconds")
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """Empty frame over a zero-partition RDD: unlike ``createDataFrame``
+    from a list, it never starts a Python worker."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def extract_fields(
@@ -147,6 +157,10 @@ class SigmaStreamPipeline:
     """foreachBatch-driven sigma pipeline over an envelope stream
     (topic, key, value: json-string, ts)."""
 
+    # rows per epoch collected for ``_on_emitted``: an anomaly storm must
+    # not grow the driver heap (the sink keeps every row)
+    anomaly_emit_cap = 1000
+
     def __init__(
         self,
         spark: SparkSession,
@@ -161,19 +175,15 @@ class SigmaStreamPipeline:
         # payload schema, extraction parses the JSON ONCE per row
         # (from_json) instead of once per field (get_json_object)
         self.payload_schemas = payload_schemas or {}
-        self._state_dir = cfg.store_dir.rstrip("/") + "_cooldown_state"
         self.anomaly_batches = 0
-        # task dim built once, not per trigger (r12): the DSL is fixed
-        # for the pipeline's lifetime and createDataFrame per micro-
-        # batch was pure driver overhead
-        self._tasks_df: DataFrame | None = None
+        self._tasks: tuple | None = None
 
     # -- step 1: DSL field extraction (P1-P4) ------------------------------
 
     def extract(self, batch: DataFrame) -> DataFrame:
         out = extract_fields(batch, self.dsl, self.payload_schemas)
         if out is None:
-            return self.spark.createDataFrame([], STORE_SCHEMA)
+            return _empty(self.spark, STORE_SCHEMA)
         return out
 
     # -- steps 2-6 ----------------------------------------------------------
@@ -183,7 +193,7 @@ class SigmaStreamPipeline:
         # anyway, but Spark logs the miss loudly on every first batch
         if not os.path.exists(self.cfg.store_dir):
             raise_if_half_swapped(self.cfg.store_dir)
-            return self.spark.createDataFrame([], STORE_SCHEMA)
+            return _empty(self.spark, STORE_SCHEMA)
         try:
             return (
                 self.spark.read.schema(STORE_READ_SCHEMA)
@@ -192,57 +202,33 @@ class SigmaStreamPipeline:
                 .drop("epoch")
             )
         except Exception:
-            return self.spark.createDataFrame([], STORE_SCHEMA)
+            return _empty(self.spark, STORE_SCHEMA)
 
-    def _read_state(self) -> DataFrame:
-        if not os.path.exists(self._state_dir):
-            raise_if_half_swapped(self._state_dir)
-            return self.spark.createDataFrame([], STATE_SCHEMA)
-        try:
-            return self.spark.read.schema(STATE_SCHEMA).parquet(self._state_dir)
-        except Exception:
-            return self.spark.createDataFrame([], STATE_SCHEMA)
-
-    def _apply_cooldown(self, anomalies: DataFrame) -> DataFrame:
-        """Exact emit-then-suppress, seeded from persisted last-emit state."""
-        state = self._read_state()
-        joined = anomalies.join(
-            state, on=["topic", "path", "window_seconds"], how="left"
-        )
-        out_schema = ", ".join(
-            f"{c} {t}" for c, t in joined.dtypes if c != "last_emit_us"
-        )
-        cd_us = self.cfg.cooldown_seconds * 1_000_000
-
-        def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("event_ts_us")
-            last = pdf["last_emit_us"].iloc[0]
-            last = None if pd.isna(last) else int(last)
-            keep = []
-            for i, t in zip(pdf.index, pdf["event_ts_us"]):
-                if last is None or (t - last) >= cd_us:
-                    keep.append(i)
-                    last = int(t)
-            return pdf.loc[keep].drop(columns=["last_emit_us"])
-
-        return joined.groupBy("topic", "path", "window_seconds").applyInPandas(
-            scan, schema=out_schema
+    def _last_emits(self, epoch_id: int) -> DataFrame | None:
+        """Cooldown seed: each series' last emit in the anomaly sink's
+        EARLIER epochs (partition-pruned), so a replayed epoch recomputes
+        exactly the rows it wrote the first time."""
+        if not os.path.exists(self.cfg.anomaly_dir):
+            return None
+        return (
+            self.spark.read.schema(SINK_READ_SCHEMA)
+            .option("basePath", self.cfg.anomaly_dir)
+            .parquet(self.cfg.anomaly_dir)
+            .filter(F.col("epoch") < epoch_id)
+            .groupBy(*SERIES)
+            .agg(F.max("event_ts_us").alias("last_emit_us"))
         )
 
-    def _update_state(self, emitted: DataFrame) -> None:
-        new_last = emitted.groupBy("topic", "path", "window_seconds").agg(
-            F.max("event_ts_us").alias("last_emit_us")
-        )
-        merged = (
-            self._read_state()
-            .unionByName(new_last)
-            .groupBy("topic", "path", "window_seconds")
-            .agg(F.max("last_emit_us").alias("last_emit_us"))
-        )
-        # tiny relation (one row per configured series); rewrite atomically
-        tmp = self._state_dir + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        atomic_swap(tmp, self._state_dir)
+    def _task_filter(self):
+        """(topic, path, window) in the DSL's tasks, as a JVM literal
+        ``IN`` (a ``createDataFrame`` task table is a Python-side RDD);
+        rebuilt only when discovery changes the tasks."""
+        tasks = tuple(self.dsl.tasks())
+        if self._tasks != tasks:
+            self._tasks = tasks
+            key = F.array("topic", "path", F.col("window_seconds").cast("string"))
+            self._in_tasks = key.isin(*[F.lit([t, p, str(w)]) for t, p, w in tasks])
+        return self._in_tasks
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         extracted = self.extract(batch)
@@ -269,7 +255,7 @@ class SigmaStreamPipeline:
         # (score_df) so an anomaly is emitted at most once — the reference
         # scores each incoming message exactly once against cached stats
         # (DSLHandler.js:178-189). One sigma_scan per distinct window set
-        # is avoided by scanning all windows and semi-joining the task list.
+        # is avoided by scanning all windows and filtering to the tasks.
         store = prev_store if prev_store is not None else self._read_store()
         windows = sorted({w for _, _, w in self.dsl.tasks()})
         if not windows:
@@ -284,45 +270,40 @@ class SigmaStreamPipeline:
             path_col="field_path",
             keep_ts=True,
             score_df=extracted,
-        )
-        if self._tasks_df is None:
-            self._tasks_df = self.spark.createDataFrame(
-                self.dsl.tasks(), "topic string, path string, window_seconds long"
-            )
-        tasks = self._tasks_df
-        anomalies = anomalies.join(
-            F.broadcast(tasks), on=["topic", "path", "window_seconds"], how="semi"
-        )
+        ).filter(self._task_filter())
 
-        # 5. cooldown (W6) with persisted state
-        emitted = self._apply_cooldown(anomalies)
+        # 5. cooldown (W6), seeded from the sink's earlier epochs
+        emitted = cooldown_exact(
+            anomalies,
+            SERIES,
+            "event_ts_us",
+            self.cfg.cooldown_seconds,
+            seed=self._last_emits(epoch_id),
+        )
         emitted.persist()
         try:
-            n_emitted = emitted.count()
-            if n_emitted > 0:
+            # one collect: the bus rows and, unless the cap overflows, the count
+            head = emitted.orderBy("event_ts_us").limit(self.anomaly_emit_cap + 1).collect()
+            if head:
                 # same per-epoch overwrite as the store: a replayed batch
-                # rewrites its own anomaly partition instead of appending
-                # duplicates (the state update is a max-merge — idempotent
-                # — so the whole pipeline is exactly-once under replay).
-                # Sink BEFORE state: if we crashed between the two in the
-                # other order, the replay would find last_emit already
-                # advanced, suppress the recompute, and the anomalies
-                # would be lost; this order merely rewrites them.
+                # rewrites its own anomaly partition with the same rows
+                # (its cooldown seed excludes that partition), so the
+                # sink is exactly-once under replay
                 emitted.write.mode("overwrite").parquet(
                     os.path.join(self.cfg.anomaly_dir, f"epoch={epoch_id}")
                 )
-                self._update_state(emitted)
                 self.anomaly_batches += 1
-                # hook for subscribers (event bus): hand over THIS epoch's
-                # anomalies while they're still persisted — subscribers
-                # must never have to re-read the (unbounded) anomaly store
-                self._on_emitted(emitted, epoch_id, n_emitted)
+                total = len(head) if len(head) <= self.anomaly_emit_cap else emitted.count()
+                # hook for subscribers (event bus), who must never have to
+                # re-read the (unbounded) anomaly store
+                self._on_emitted(head[: self.anomaly_emit_cap], epoch_id, total)
         finally:
             emitted.unpersist()
 
-    def _on_emitted(self, emitted: DataFrame, epoch_id: int, total: int) -> None:
+    def _on_emitted(self, rows: list[Row], epoch_id: int, total: int) -> None:
         """Called once per anomaly-producing epoch with that epoch's
-        emitted rows (persisted) and their count. Default: no-op."""
+        earliest ``anomaly_emit_cap`` rows (event-time order) and the
+        epoch's total anomaly count. Default: no-op."""
 
     def compact_store(self) -> None:
         """Physical retention prune (S6) — rewrite the store keeping only
@@ -359,8 +340,9 @@ class SigmaStreamPipeline:
 
     def truncate(self) -> None:
         """S7: drop all engine state (reference SigmaModel.remove({}) via
-        DELETE /db/truncate) — store, cooldown state, and anomalies."""
-        for d in (self.cfg.store_dir, self._state_dir, self.cfg.anomaly_dir):
+        DELETE /db/truncate) — store and anomalies (which also hold the
+        cooldown state)."""
+        for d in (self.cfg.store_dir, self.cfg.anomaly_dir):
             if os.path.exists(d):
                 shutil.rmtree(d)
 

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import datetime as dt
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from sarkac_spark.functions.paths import (
@@ -134,6 +136,49 @@ def test_cooldown_exact_emit_then_suppress(spark):
         r.event_id for r in cooldown_exact(df, ["topic", "path"], "ts").collect()
     )
     assert kept == [0, 3, 5]
+
+
+def _walk(rows, seed, cd_us):
+    """Plain-Python emit-then-suppress over (event_id, topic, path,
+    ts_us) rows, in (ts, row) order per key, each key's clock started at
+    its ``seed`` last emit when it has one."""
+    last, kept = dict(seed), []
+    for r in sorted(rows, key=lambda r: (r[3], r)):
+        key = r[1:3]
+        if key not in last or r[3] - last[key] >= cd_us:
+            kept.append(r)
+            last[key] = r[3]
+    return sorted(kept)
+
+
+@pytest.mark.parametrize("cooldown_seconds", [0, 120])
+def test_cooldown_exact_matches_python_walk(spark, cooldown_seconds):
+    """The JVM walk equals the plain-Python one on random anomalies over
+    several keys, with tied timestamps (10 s grid) and seeded and
+    unseeded keys; ties go to the smaller row, on every run."""
+    rng = random.Random(7)
+    keys = [(t, p) for t in ("a", "b", "c") for p in ("x", "y")]
+    rows = [
+        (i, *rng.choice(keys), rng.randrange(60) * 10_000_000) for i in range(300)
+    ]
+    # a seed 100 s before the first tick (still cooling at 120 s), one
+    # far in the past, one after every row, one for a key with no rows
+    seed = {
+        ("a", "x"): -100_000_000,
+        ("b", "y"): -10**12,
+        ("c", "x"): 10**12,
+        ("z", "z"): 0,
+    }
+    df = spark.createDataFrame(rows, "event_id long, topic string, path string, ts long")
+    seed_df = spark.createDataFrame(
+        [(t, p, us) for (t, p), us in seed.items()],
+        "topic string, path string, last_emit_us long",
+    )
+    cd_us = cooldown_seconds * 1_000_000
+    for s, s_df in ((seed, seed_df), ({}, None)):
+        got = cooldown_exact(df, ["topic", "path"], "ts", cooldown_seconds, seed=s_df)
+        assert got.columns == df.columns
+        assert sorted(map(tuple, got.collect())) == _walk(rows, s, cd_us)
 
 
 def test_cooldown_bucketed(spark):

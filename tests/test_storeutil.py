@@ -100,11 +100,10 @@ def test_pipeline_read_raises_on_half_swapped_sig_store(spark, tmp_path):
 
 
 def test_sigma_pipeline_reads_raise_on_half_swapped_dirs(tmp_path):
-    """The rescan sigma pipeline rewrites its cooldown state every
-    anomaly trigger and its value store on compaction, both through
-    atomic_swap: a crash mid-swap must fail the next read instead of
-    re-emitting inside the cooldown or scoring against nothing. Both
-    checks run before any Spark call."""
+    """The rescan sigma pipeline rewrites its value store on compaction
+    through atomic_swap: a crash mid-swap must fail the next read
+    instead of scoring against nothing. The check runs before any Spark
+    call."""
     from sarkac_spark.config import DSL
     from sarkac_spark.streaming.pipeline import (
         SigmaStreamConfig,
@@ -115,9 +114,6 @@ def test_sigma_pipeline_reads_raise_on_half_swapped_dirs(tmp_path):
         store_dir=str(tmp_path / "store"), anomaly_dir=str(tmp_path / "anom")
     )
     pipe = SigmaStreamPipeline(None, DSL.parse({}), cfg)
-    _mkstore(pipe._state_dir + ".old", "last cooldown state")
-    with pytest.raises(HalfSwappedStoreError):
-        pipe._read_state()
     _mkstore(cfg.store_dir + ".old", "last store")
     with pytest.raises(HalfSwappedStoreError):
         pipe._read_store()

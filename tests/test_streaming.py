@@ -116,18 +116,26 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     )
     p = SigmaStreamPipeline(spark, DSL_FIXTURE, cfg)
     msgs = example_messages(spark, n=48)
+
+    def anomaly_rows():
+        return sorted(map(tuple, spark.read.parquet(cfg.anomaly_dir).collect()))
+
     p.process_batch(msgs, epoch_id=7)
     assert spark.read.parquet(cfg.store_dir).count() == 96
-    n_anoms = spark.read.parquet(cfg.anomaly_dir).count()
-    assert n_anoms > 0
+    first = anomaly_rows()
+    assert first
     p.process_batch(msgs, epoch_id=7)  # replay after simulated failure
     assert spark.read.parquet(cfg.store_dir).count() == 96  # unchanged
-    # anomaly sink is exactly-once too: the replay found last_emit already
-    # advanced (cooldown suppresses the recompute) and the original epoch
-    # partition still holds exactly the first attempt's rows
-    assert spark.read.parquet(cfg.anomaly_dir).count() == n_anoms
-    p.process_batch(msgs, epoch_id=8)  # a genuinely new batch still lands
+    # anomaly sink is exactly-once too: the replay's cooldown is seeded
+    # only from EARLIER epochs' sink partitions, so it recomputes the
+    # first attempt's rows and overwrites its own partition with them
+    assert anomaly_rows() == first
+    # a genuinely new batch still lands in the store, but its anomalies
+    # (the same event times again) all fall inside the cooldown clocks
+    # that epoch 7's emits started, read back from the sink
+    p.process_batch(msgs, epoch_id=8)
     assert spark.read.parquet(cfg.store_dir).count() == 192
+    assert anomaly_rows() == first
 
 
 def test_truncate(spark, pipeline):

@@ -92,14 +92,17 @@ _FOREIGN_CWD_SCRIPT = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
 import pandas as pd
-from sarkac_spark.operators.cooldown import cooldown_exact
+from pyspark.sql.functions import pandas_udf
 from sarkac_spark.session import get_spark
 
 spark = get_spark("foreign_cwd", master="local[2]", shuffle_partitions=2)
-anoms = spark.createDataFrame(
-    [("t", 0), ("t", 30), ("t", 200), ("u", 10)], "key string, ts_s long"
-).selectExpr("key", "timestamp_seconds(ts_s) AS ts")
-kept = cooldown_exact(anoms, ["key"], "ts", cooldown_seconds=120)
+
+@pandas_udf("long")
+def seconds(s: pd.Series) -> pd.Series:
+    from sarkac_spark.config import parse_duration  # imported in the worker
+    return s.map(parse_duration)
+
+durations = spark.createDataFrame([("2m",), ("1h",), ("15m",)], "d string")
 
 def shim_name(it):
     import zipimport
@@ -108,7 +111,7 @@ def shim_name(it):
 
 names = spark.range(2).mapInPandas(shim_name, "q string").collect()
 print(json.dumps({
-    "kept": sorted(map(tuple, kept.selectExpr("key", "unix_seconds(ts)").collect())),
+    "seconds": sorted(r.s for r in durations.select(seconds("d").alias("s")).collect()),
     "names": sorted({r.q for r in names}),
 }))
 spark.stop()
@@ -130,7 +133,7 @@ def test_session_outside_repo_root_boots_workers_from_daemon(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
-    assert got["kept"] == [["t", 0], ["t", 200], ["u", 10]]
+    assert got["seconds"] == [120, 900, 3600]
     expected = "invalidate_caches_if_changed" if sys.version_info < (3, 12) else (
         "zipimporter.invalidate_caches"
     )
