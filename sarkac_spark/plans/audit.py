@@ -163,22 +163,21 @@ def read_schemas(df: DataFrame) -> list[str]:
 def plan_digest(df: DataFrame) -> str:
     """Stable 12-hex fingerprint of the physical plan SHAPE — equal
     across runs/sessions iff the plan is structurally the same. Strips
-    everything instance-specific before hashing: expression ids
-    (``#123``), codegen stage ids, plan node ids, file paths/sizes and
-    row-count statistics. ``bench.py`` persists one per query so
-    ``tools/bench_diff.py`` can answer 'did this wall move because the
-    PLAN changed, or is it box drift?' mechanically across rounds.
-
-    Known noise source (measured: 153/154 registry queries digest-stable
-    across same-session rebuilds): queries with MULTIPLE DISTINCT
-    aggregates (``profile_documents``) can flip the Expand grouping-key
-    ORDER between builds (Catalyst's RewriteDistinctAggregates iterates
-    an unordered set), which flips the digest with no semantic change.
-    Treat a digest change as evidence to confirm with
-    ``tools/plan_report.py``, not as proof by itself."""
+    everything instance-specific before hashing — expression ids
+    (``#123``), codegen stage ids, plan node ids, file paths/sizes,
+    row-count statistics and a file scan's DataFilters — and puts the
+    distinct-aggregate Expand's group columns in one order
+    (``_canonical_distinct_groups``).
+    ``bench.py`` persists one per query so ``tools/bench_diff.py`` can
+    answer 'did this wall move because the PLAN changed, or is it box
+    drift?' mechanically across rounds."""
     import hashlib
 
     s = resolved_plan(df)
+    # a file scan prints its DataFilters cut at a fixed length that counts
+    # expression-id digits, so the cut moves as the session's id counter
+    # grows; the Filter node above the scan prints the same filters whole
+    s = re.sub(r"DataFilters: \[.*?(?=, Format: )", "DataFilters: [...]", s)
     s = re.sub(r"#\d+[L]?", "#", s)  # expression ids
     s = re.sub(r"\b([xyz])_\d+#", r"\1_#", s)  # session-global lambda-var counter
     s = re.sub(r"_common_expr_\d+", "_common_expr_", s)  # CSE counter, also global
@@ -190,4 +189,42 @@ def plan_digest(df: DataFrame) -> str:
     s = re.sub(r"file:[^\s,\]\)]*", "file:", s)  # absolute paths
     s = re.sub(r"\d+\.\d+ [KMGT]?i?B", "", s)  # size annotations
     s = re.sub(r"cachedcount=\d+|rowCount=\d+", "", s)
+    s = _canonical_distinct_groups(s)
     return hashlib.sha256(s.encode()).hexdigest()[:12]
+
+
+_DISTINCT_EXPAND = re.compile(r"Expand \[(\[.*\])\], \[([^\[\]]*)\]$", re.M)
+
+
+def _canonical_distinct_groups(s: str) -> str:
+    """Catalyst's RewriteDistinctAggregates numbers the distinct groups
+    of a multi-distinct aggregate (``profile_documents``) in hash order
+    of their expression ids, so every rebuild can order the Expand's
+    group columns — and with them the aggregate keys, sort order and
+    hash partitioning above it — differently. Sort those columns,
+    permute each Expand projection to match, and sort the projections
+    with their group-id literal blanked. Runs on the id-stripped plan
+    string; an Expand whose projections hold comma-bearing expressions
+    is left as it is."""
+    for m in list(_DISTINCT_EXPAND.finditer(s)):
+        out = m.group(2).split(", ")
+        if "gid#" not in out:
+            continue
+        k = out.index("gid#")
+        keys = out[:k]
+        order = sorted(range(k), key=keys.__getitem__)
+        rows = [r.split(", ") for r in m.group(1)[1:-1].split("], [")]
+        if any(len(r) != len(out) for r in rows):
+            continue
+        canon = [keys[i] for i in order]
+        projections = sorted(
+            "[" + ", ".join([r[i] for i in order] + ["gid"] + r[k + 1 :]) + "]"
+            for r in rows
+        )
+        s = s.replace(
+            m.group(0),
+            f"Expand [{', '.join(projections)}], [{', '.join(canon + out[k:])}]",
+        )
+        for sep in (", ", " ASC NULLS FIRST, "):
+            s = s.replace(sep.join(keys + ["gid#"]), sep.join(canon + ["gid#"]))
+    return s

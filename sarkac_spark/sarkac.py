@@ -270,7 +270,10 @@ def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> tuple[bool, i
     from pyspark.sql import functions as F
 
     by_topic = batch.groupBy("topic").agg(F.first("value").alias("value"), F.count("*").alias("n"))
-    samples = by_topic.collect()
+    rows = by_topic.collect()
+    # a null topic names no topic: its rows count as messages but take
+    # no part in the topic diff or field discovery
+    samples = [r for r in rows if r.topic is not None]
     created, deleted = discovery.step_topics(
         sorted({r.topic for r in samples} | set(discovery.known_topics))
     )
@@ -283,7 +286,7 @@ def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> tuple[bool, i
     for r in samples:
         if r.value is not None and discovery.step_fields(r.topic, r.value):
             changed = True
-    return changed, sum(r.n for r in samples)
+    return changed, sum(r.n for r in rows)
 
 
 class _BusSigmaPipeline(SigmaStreamPipeline):

@@ -15,14 +15,12 @@ the semantics of the batch operator exactly (old×old pairs never
 generated, per-trigger cost O(batch × bucket occupancy)) and lets the
 corpus store live as plain partitioned parquet any batch job can read.
 
-Exactly-once under at-least-once replay: survivors land in a PER-EPOCH
-directory written with overwrite (the ``SigmaStreamPipeline`` store
-trick — a replayed epoch rewrites its own partition instead of
-appending duplicates), and the corpus side of the dedup EXCLUDES the
-current epoch's partition, so a replayed batch never dedups against
-its own half-committed rows. The signature store follows the same
-per-epoch-overwrite discipline, so text and signatures converge
-together on replay.
+Exactly-once under at-least-once replay: both stores are
+``storeutil.EpochStore`` per-epoch stores — survivors land in this
+epoch's partition, overwritten on replay, and the corpus side of the
+dedup EXCLUDES the current epoch's partition, so a replayed batch never
+dedups against its own half-committed rows. Text and signatures are
+written per epoch from one verdict, so they converge together on replay.
 
 PRECONDITION (inherited from ``dedup_minhash_incremental``): document
 ids are unique across the stream — a replayed epoch re-presents the
@@ -43,7 +41,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sarkac_spark.operators.dedup import (
@@ -52,14 +49,7 @@ from sarkac_spark.operators.dedup import (
     incremental_exact_dedup,
     incremental_minhash_drop_ids_sigs,
 )
-from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
-
-# AnalysisException error classes that mean "nothing committed yet" —
-# the ONLY quiet path. Anything else (corrupt footer, permissions,
-# transient FS failure) must fail the trigger loudly: treating a broken
-# store as empty would commit the batch UNdeduped, and the damage is
-# permanent (a later retry replays only its own epoch).
-_EMPTY_STORE_CLASSES = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+from sarkac_spark.streaming.storeutil import EpochStore
 
 # Signature-store FORMAT version, recorded as a `_FORMAT` marker file
 # (underscore prefix: invisible to Spark's parquet reader, like
@@ -71,22 +61,12 @@ _EMPTY_STORE_CLASSES = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 SIG_STORE_FORMAT = 2
 
 
-def _is_empty_store_error(e: AnalysisException) -> bool:
-    cls = e.getCondition() if hasattr(e, "getCondition") else None
-    if cls is None and hasattr(e, "getErrorClass"):
-        cls = e.getErrorClass()
-    if cls in _EMPTY_STORE_CLASSES:
-        return True
-    msg = str(e)
-    return "Path does not exist" in msg or "Unable to infer schema" in msg
-
-
 class IncrementalDedupPipeline:
     """``minhash=None`` runs exact-only dedup; a dict (``k``, ``bands``,
     ``threshold``, ``max_band_df``) adds near-dup dropping after the
     exact pass.
 
-    Stores (both plain partitioned parquet, epoch=N partitions):
+    Stores (both ``storeutil.EpochStore`` per-epoch stores):
 
     - ``store_dir`` — the committed (id, text) corpus, what a training
       job reads via ``committed()``.
@@ -111,26 +91,19 @@ class IncrementalDedupPipeline:
         self.id_col = id_col
         self.text_col = text_col
         self.minhash = minhash
+        self._text = EpochStore(spark, self.store_dir)
+        self._sigs = EpochStore(spark, self.sig_dir)
 
     def _read_sigs(self, exclude_epoch: int) -> DataFrame | None:
         """Committed signature rows, excluding ``exclude_epoch``'s
         partition (replay safety). None when nothing is committed yet;
-        any OTHER read failure propagates (see _EMPTY_STORE_CLASSES).
-
-        The existence probe IS the read attempt — no driver-local
-        ``os.path.exists``, so the store may live on HDFS/S3/anything
-        the session's Hadoop conf can reach."""
-        try:
-            sigs = self.spark.read.parquet(self.sig_dir)
-        except AnalysisException as e:
-            if _is_empty_store_error(e):
-                # not quite quiet: a missing store with a .old remnant
-                # means a compact() swap crashed mid-flight — fail loud.
-                raise_if_half_swapped(self.sig_dir)
-                return None
-            raise
+        any OTHER read failure propagates (storeutil's empty-store
+        rule)."""
+        sigs = self._sigs.read(exclude_epoch=exclude_epoch)
+        if sigs is None:
+            return None
         self._check_sig_format()
-        return sigs.filter(F.col("epoch") != exclude_epoch).drop("epoch")
+        return sigs.drop("epoch")
 
     def _check_sig_format(self) -> None:
         """A readable store without a matching `_FORMAT` marker is a
@@ -230,12 +203,8 @@ class IncrementalDedupPipeline:
         verdict, two projections), so the stores cannot disagree.
         Returns the materialized survivors."""
         kept = kept.localCheckpoint(eager=True)
-        kept.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, f"epoch={epoch_id}")
-        )
-        self._batch_sigs(kept).write.mode("overwrite").parquet(
-            os.path.join(self.sig_dir, f"epoch={epoch_id}")
-        )
+        self._text.write(kept, epoch_id)
+        self._sigs.write(self._batch_sigs(kept), epoch_id)
         self._write_sig_format()
         return kept
 
@@ -251,66 +220,21 @@ class IncrementalDedupPipeline:
         read path, and at 100 TB the file-listing alone would dominate
         the trigger. Returns the compacted doc count.
 
-        ``target_partitions=None`` AUTO-SIZES the folded stores at
-        ~250k rows per file: the per-trigger signature scan reads the
-        compacted layer back, and folding a large store to one file
-        serializes that scan to a couple of parquet-split tasks however
-        many cores the cluster has (measured: the curator's 100x decade
-        point spent most of its per-trigger growth re-reading a
-        single-file 1.1 GB sig store). Pass an explicit int to override
-        either way.
-
-        Contract: run while the stream is STOPPED (the
-        ``SigmaStreamPipeline.compact_store`` precedent). foreachBatch
-        can only replay its last uncommitted epoch, and compaction must
-        never fold an epoch that could still replay — pausing the query
-        guarantees everything on disk is committed. ``epoch=-1`` never
-        collides with a checkpoint epoch id, and the replay-safety
-        ``epoch != current`` filter never excludes it.
+        ``target_partitions=None`` auto-sizes the folded stores
+        (``storeutil.ROWS_PER_FILE``) so the per-trigger signature scan
+        keeps its parallelism; pass an explicit int to override. Run
+        while the stream is STOPPED (``EpochStore.compact``).
         """
-        n_docs = 0
-        for store in (self.store_dir, self.sig_dir):
-            df = self._read_or_none_any(store)
-            if df is None:
-                continue
-            if store == self.sig_dir:
-                # refuse to fold (and thereby re-stamp) a legacy or
-                # foreign-format signature store: compacting one would
-                # bless mod-P sh_set values as format 2 and silently
-                # re-enable the admit-every-near-dup failure the marker
-                # exists to prevent.
-                self._check_sig_format()
-            if target_partitions is None:
-                # ceil: ~250k rows/file is an UPPER bound (floor div
-                # yielded up to ~500k rows in the last pre-ceil file)
-                parts = max(1, -(-df.count() // 250_000))
-            else:
-                parts = max(1, int(target_partitions))
-            data = df.drop("epoch").repartition(parts)
-            tmp = store.rstrip("/") + ".compact"
-            data.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=-1"))
-            if store == self.store_dir:
-                n_docs = self.spark.read.parquet(tmp).count()
-            elif os.path.isdir(tmp):
-                # stamp the marker INTO the tmp dir so the swap below is
-                # atomic including the marker — a crash after the swap
-                # can no longer leave a healthy store that the next read
-                # rejects as unmarked.
-                with open(os.path.join(tmp, "_FORMAT"), "w") as f:
-                    f.write(str(SIG_STORE_FORMAT))
-            # crash-safe swap: never a window where the store is absent
-            # without a loud .old marker (storeutil.atomic_swap).
-            atomic_swap(tmp, store)
+        # refuse to fold (and thereby carry forward) a legacy or
+        # foreign-format signature store's marker: compacting one would
+        # bless mod-P sh_set values and silently re-enable the
+        # admit-every-near-dup failure the marker exists to prevent.
+        if self._sigs.read() is not None:
+            self._check_sig_format()
+        n_docs = self._text.compact(partitions=target_partitions)
+        # the _FORMAT marker rides into the folded copy before the swap
+        self._sigs.compact(partitions=target_partitions)
         return n_docs
-
-    def _read_or_none_any(self, path: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException as e:
-            if _is_empty_store_error(e):
-                raise_if_half_swapped(path)
-                return None
-            raise
 
     def start(
         self,

@@ -26,12 +26,13 @@ recount (riding the same corpus scan the refit itself needs), keeping
 the invariant "current-version occupancy == corpus occupancy under
 current centroids" without ever rescanning on the NON-refit path.
 
-Exactly-once under at-least-once replay, same discipline as
-``IncrementalDedupPipeline`` — every epoch-keyed write is a per-epoch
-overwrite and the refit is deterministic (seeded KMeans over an
-id-hash-partitioned, id-sorted copy of the stored rows — a replay
-re-derives the same centers whatever the store's file layout or the
-core count) — plus two refit-specific rules:
+Exactly-once under at-least-once replay: vecs and each version's
+occupancy are ``storeutil.EpochStore`` per-epoch stores (every
+epoch-keyed write is a per-epoch overwrite), and the refit is
+deterministic (seeded KMeans over an id-hash-partitioned, id-sorted
+copy of the stored rows — a replay re-derives the same centers
+whatever the store's file layout or the core count) — plus two
+refit-specific rules:
 
 - the CENTROIDS write is last (the commit point): a crash anywhere
   before it replays under the OLD version, re-derives the identical
@@ -55,12 +56,20 @@ above the distribution's natural skew, same contract as the batch
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sarkac_spark.operators.similarity import assign_buckets, refit_ivf_centroids
-from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
+from sarkac_spark.streaming.storeutil import (
+    BASE_EPOCH,
+    EpochStore,
+    read_parquet_or_none,
+)
+
+
+def _bucket_totals(occ: DataFrame) -> DataFrame:
+    return occ.groupBy("bucket").agg(F.sum("n_vecs").cast("long").alias("n_vecs"))
 
 
 class IvfMaintenancePipeline:
@@ -88,28 +97,23 @@ class IvfMaintenancePipeline:
         self.n_buckets = len(initial_centroids)
         self._initial = initial_centroids
         self.refits = 0  # this process's refit count (observability)
+        self._vecs = EpochStore(spark, self._path("vecs"))
 
     # --- store plumbing ---------------------------------------------------
 
     def _path(self, *parts: str) -> str:
         return os.path.join(self.store_dir, *parts)
 
-    def _read_or_none(self, path: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "Path does not exist" in msg or "Unable to infer schema" in msg:
-                raise_if_half_swapped(path)
-                return None
-            raise
+    def _occupancy(self, version: int) -> EpochStore:
+        """Per-epoch bucket counts under centroid ``version``."""
+        return EpochStore(self.spark, self._path("occupancy", f"version={version}"))
 
     # --- versioned state ---------------------------------------------------
 
     def centroids(self) -> tuple[DataFrame, int]:
         """(current centroid relation, version). Bootstraps version 0
         from ``initial_centroids`` on first call."""
-        df = self._read_or_none(self._path("centroids"))
+        df = read_parquet_or_none(self.spark, self._path("centroids"))
         if df is None:
             boot = self.spark.createDataFrame(
                 [(int(i), [float(x) for x in v]) for i, v in self._initial],
@@ -124,14 +128,10 @@ class IvfMaintenancePipeline:
 
     def occupancy(self, version: int) -> DataFrame:
         """Per-bucket totals under ``version`` — <= n_buckets rows."""
-        occ = self._read_or_none(self._path("occupancy"))
+        occ = self._occupancy(version).read()
         if occ is None:
             return self.spark.createDataFrame([], "bucket long, n_vecs long")
-        return (
-            occ.filter(F.col("version") == version)
-            .groupBy("bucket")
-            .agg(F.sum("n_vecs").cast("long").alias("n_vecs"))
-        )
+        return _bucket_totals(occ)
 
     def distortion_trend(self) -> DataFrame:
         """Per-VERSION index distortion over the CURRENT stored corpus
@@ -144,11 +144,11 @@ class IvfMaintenancePipeline:
         scan × a versions-×-buckets broadcast dim."""
         from sarkac_spark.operators.similarity import ivf_distortion_trend
 
-        cents = self._read_or_none(self._path("centroids"))
+        cents = read_parquet_or_none(self.spark, self._path("centroids"))
         if cents is None:
             cents, _ = self.centroids()  # bootstraps version 0
             cents = cents.withColumn("version", F.lit(0))
-        vecs = self._read_or_none(self._path("vecs"))
+        vecs = self._vecs.read()
         if vecs is None:
             return self.spark.createDataFrame(
                 [], "version long, n_vecs long, total_gap_micro long"
@@ -195,17 +195,13 @@ class IvfMaintenancePipeline:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         cents, version = self.centroids()
         vecs = batch.select(self.id_col, self.vec_col)
-        vecs.write.mode("overwrite").parquet(
-            self._path("vecs", f"epoch={epoch_id}")
-        )
-        self._bucket_counts(vecs, cents).write.mode("overwrite").parquet(
-            self._path("occupancy", f"version={version}", f"epoch={epoch_id}")
-        )
+        self._vecs.write(vecs, epoch_id)
+        self._occupancy(version).write(self._bucket_counts(vecs, cents), epoch_id)
         needs, _total = self.gate(version)
         if not needs:
             return
         # --- refit: the one corpus-sized step, paid only on rebuild ---
-        corpus = self.spark.read.parquet(self._path("vecs"))
+        corpus = self._vecs.read()
         new_cents = refit_ivf_centroids(
             corpus,
             self.n_buckets,
@@ -214,19 +210,15 @@ class IvfMaintenancePipeline:
             seed=self.seed,
             max_train_rows=self.max_train_rows,
         )
-        new_version = version + 1
+        occupancy = self._occupancy(version + 1)
         # base recount EXCLUDES this epoch (its counts live in its own
         # partition so a post-commit replay overwrites, never double-counts)
-        rest = corpus.filter(F.col("epoch") != epoch_id)
-        self._bucket_counts(rest, new_cents).write.mode("overwrite").parquet(
-            self._path("occupancy", f"version={new_version}", "epoch=-1")
-        )
-        self._bucket_counts(vecs, new_cents).write.mode("overwrite").parquet(
-            self._path("occupancy", f"version={new_version}", f"epoch={epoch_id}")
-        )
+        rest = self._vecs.read(exclude_epoch=epoch_id)
+        occupancy.write(self._bucket_counts(rest, new_cents), BASE_EPOCH)
+        occupancy.write(self._bucket_counts(vecs, new_cents), epoch_id)
         # centroids last — the commit point (see module docstring)
         new_cents.write.mode("overwrite").parquet(
-            self._path("centroids", f"version={new_version}")
+            self._path("centroids", f"version={version + 1}")
         )
         self.refits += 1
 
@@ -237,36 +229,16 @@ class IvfMaintenancePipeline:
         epochs): vecs epochs merge into one base partition, the CURRENT
         version's occupancy partitions collapse to one summed base row-
         set, and superseded centroid/occupancy versions are dropped.
-        Returns the compacted vector count.Directory swaps use local-filesystem
-        moves (shutil, the compact_store precedent) — on an object store,
-        run the same rewrite as a batch job with a rename-capable
-        committer.
+        Returns the compacted vector count.
         """
-        import shutil
-
         _, version = self.centroids()
-        n = 0
-        # vecs: fold epochs
-        vecs = self._read_or_none(self._path("vecs"))
-        if vecs is not None:
-            tmp = self._path("vecs").rstrip("/") + ".compact"
-            vecs.drop("epoch").coalesce(max(1, int(target_partitions))).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, "epoch=-1"))
-            n = self.spark.read.parquet(tmp).count()
-            atomic_swap(tmp, self._path("vecs"))
-        # occupancy: current version only, summed into the base partition
-        occ = self.occupancy(version)
-        tmp = self._path("occupancy").rstrip("/") + ".compact"
-        occ.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, f"version={version}", "epoch=-1")
-        )
-        atomic_swap(tmp, self._path("occupancy"))
-        # centroids: drop superseded versions
-        cents_dir = self._path("centroids")
-        for d in os.listdir(cents_dir):
-            if d.startswith("version=") and d != f"version={version}":
-                shutil.rmtree(os.path.join(cents_dir, d))
+        n = self._vecs.compact(partitions=target_partitions)
+        self._occupancy(version).compact(_bucket_totals, partitions=1)
+        # superseded centroid and occupancy versions
+        for root in (self._path("centroids"), self._path("occupancy")):
+            for d in os.listdir(root) if os.path.isdir(root) else ():
+                if d.startswith("version=") and d != f"version={version}":
+                    shutil.rmtree(os.path.join(root, d))
         return n
 
     def start(

@@ -8,7 +8,9 @@ Spark-first, both collapse into ONE micro-batch loop —
 
     every trigger (default 15 s), for the new micro-batch:
       1. extract DSL fields         -> long (topic, field_path, value, ts)
-      2. append to the value store  (parquet; the SigmaModel collection)
+      2. append to the value store  (the SigmaModel collection, as a
+         per-epoch parquet store: replay-safe overwrite of epoch=N —
+         the rules live in ``storeutil.EpochStore``)
       3. recompute trailing stats from the retained store  (A1-A3, A5)
       4. score the *batch* rows against those stats        (P6)
       5. cooldown-suppress per (topic, path, window)       (W6, exact
@@ -40,8 +42,6 @@ watermark) and accept aligned-window semantics.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 from dataclasses import dataclass
 
@@ -56,7 +56,7 @@ from sarkac_spark.config import (
 from sarkac_spark.operators.anomaly import sigma_scan
 from sarkac_spark.operators.cooldown import cooldown_exact
 from sarkac_spark.operators.fields import dsl_field_exprs, to_sigma_store
-from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
+from sarkac_spark.streaming.storeutil import EpochStore
 
 STORE_SCHEMA = "topic string, produced timestamp, key string, field_path string, value double"
 # epoch is a partition directory (epoch=N/topic=T/part-*.parquet): the
@@ -177,6 +177,8 @@ class SigmaStreamPipeline:
         self.payload_schemas = payload_schemas or {}
         self.anomaly_batches = 0
         self._tasks: tuple | None = None
+        self.store = EpochStore(spark, cfg.store_dir, STORE_READ_SCHEMA)
+        self.sink = EpochStore(spark, cfg.anomaly_dir, SINK_READ_SCHEMA)
 
     # -- step 1: DSL field extraction (P1-P4) ------------------------------
 
@@ -189,35 +191,19 @@ class SigmaStreamPipeline:
     # -- steps 2-6 ----------------------------------------------------------
 
     def _read_store(self) -> DataFrame:
-        # existence pre-check: an AnalysisException here would be caught
-        # anyway, but Spark logs the miss loudly on every first batch
-        if not os.path.exists(self.cfg.store_dir):
-            raise_if_half_swapped(self.cfg.store_dir)
+        store = self.store.read()
+        if store is None:
             return _empty(self.spark, STORE_SCHEMA)
-        try:
-            return (
-                self.spark.read.schema(STORE_READ_SCHEMA)
-                .option("basePath", self.cfg.store_dir)
-                .parquet(self.cfg.store_dir)
-                .drop("epoch")
-            )
-        except Exception:
-            return _empty(self.spark, STORE_SCHEMA)
+        return store.drop("epoch")
 
     def _last_emits(self, epoch_id: int) -> DataFrame | None:
         """Cooldown seed: each series' last emit in the anomaly sink's
         EARLIER epochs (partition-pruned), so a replayed epoch recomputes
         exactly the rows it wrote the first time."""
-        if not os.path.exists(self.cfg.anomaly_dir):
+        sink = self.sink.read(before_epoch=epoch_id)
+        if sink is None:
             return None
-        return (
-            self.spark.read.schema(SINK_READ_SCHEMA)
-            .option("basePath", self.cfg.anomaly_dir)
-            .parquet(self.cfg.anomaly_dir)
-            .filter(F.col("epoch") < epoch_id)
-            .groupBy(*SERIES)
-            .agg(F.max("event_ts_us").alias("last_emit_us"))
-        )
+        return sink.groupBy(*SERIES).agg(F.max("event_ts_us").alias("last_emit_us"))
 
     def _task_filter(self):
         """(topic, path, window) in the DSL's tasks, as a JVM literal
@@ -240,16 +226,11 @@ class SigmaStreamPipeline:
             self._read_store() if self.cfg.score_against_previous else None
         )
 
-        # 2. append new points to the store (S4) into a PER-EPOCH
-        # directory with overwrite: when the checkpoint replays a batch
-        # after a failure, the rewrite lands on the same path — the store
-        # stays exactly-once even though foreachBatch is at-least-once.
-        # (A plain append would double-count replayed values in every
-        # later stats scan.) Nested topic partitioning keeps per-topic
-        # file pruning.
-        extracted.write.mode("overwrite").partitionBy("topic").parquet(
-            os.path.join(self.cfg.store_dir, f"epoch={epoch_id}")
-        )
+        # 2. append new points to the store (S4) as this epoch's
+        # partition, overwritten on replay (storeutil.EpochStore): the
+        # store stays exactly-once though foreachBatch is at-least-once.
+        # Nested topic partitioning keeps per-topic file pruning.
+        self.store.write(extracted, epoch_id, partition_by=("topic",))
 
         # 3+4. stats over retained store; score ONLY this batch's rows
         # (score_df) so an anomaly is emitted at most once — the reference
@@ -289,9 +270,7 @@ class SigmaStreamPipeline:
                 # rewrites its own anomaly partition with the same rows
                 # (its cooldown seed excludes that partition), so the
                 # sink is exactly-once under replay
-                emitted.write.mode("overwrite").parquet(
-                    os.path.join(self.cfg.anomaly_dir, f"epoch={epoch_id}")
-                )
+                self.sink.write(emitted, epoch_id)
                 self.anomaly_batches += 1
                 total = len(head) if len(head) <= self.anomaly_emit_cap else emitted.count()
                 # hook for subscribers (event bus), who must never have to
@@ -306,10 +285,10 @@ class SigmaStreamPipeline:
         epoch's total anomaly count. Default: no-op."""
 
     def compact_store(self) -> None:
-        """Physical retention prune (S6) — rewrite the store keeping only
-        rows inside each topic's max retention. Run offline/periodically;
-        logical pruning already happens in every stats scan."""
-        store = self._read_store()
+        """Physical retention prune (S6) — fold the store to its base
+        layer keeping only rows inside each topic's max retention. Run
+        offline/periodically, with the stream stopped; logical pruning
+        already happens in every stats scan."""
         retention = {
             t.topic: max((f.retention_seconds for f in t.fields), default=0)
             for t in self.dsl.topics.values()
@@ -317,34 +296,29 @@ class SigmaStreamPipeline:
         ret_df = self.spark.createDataFrame(
             list(retention.items()), "topic string, retention_s long"
         )
-        as_of = store.agg(F.max("produced").alias("as_of"))
-        kept = (
-            store.crossJoin(F.broadcast(as_of))
-            .join(F.broadcast(ret_df), "topic", "left")
-            .filter(
-                F.unix_micros(F.col("produced").cast("timestamp"))
-                >= F.unix_micros(F.col("as_of").cast("timestamp"))
-                - F.coalesce(F.col("retention_s"), F.lit(0)) * 1_000_000
+
+        def keep_retained(store: DataFrame) -> DataFrame:
+            as_of = store.agg(F.max("produced").alias("as_of"))
+            return (
+                store.crossJoin(F.broadcast(as_of))
+                .join(F.broadcast(ret_df), "topic", "left")
+                .filter(
+                    F.unix_micros(F.col("produced").cast("timestamp"))
+                    >= F.unix_micros(F.col("as_of").cast("timestamp"))
+                    - F.coalesce(F.col("retention_s"), F.lit(0)) * 1_000_000
+                )
+                .select(*store.columns)
             )
-            .select(*store.columns)
-        )
-        tmp = self.cfg.store_dir + ".compact"
-        # compacted rows land in a single epoch=0 partition so the store
-        # keeps its epoch=N/topic=T layout (process_batch epoch ids from
-        # the checkpoint keep increasing, so epoch=0 is never overwritten
-        # by a replay)
-        kept.write.mode("overwrite").partitionBy("topic").parquet(
-            os.path.join(tmp, "epoch=0")
-        )
-        atomic_swap(tmp, self.cfg.store_dir)
+
+        # the folded rows keep the epoch=N/topic=T layout
+        self.store.compact(keep_retained, partition_by=("topic",))
 
     def truncate(self) -> None:
         """S7: drop all engine state (reference SigmaModel.remove({}) via
         DELETE /db/truncate) — store and anomalies (which also hold the
         cooldown state)."""
-        for d in (self.cfg.store_dir, self.cfg.anomaly_dir):
-            if os.path.exists(d):
-                shutil.rmtree(d)
+        self.store.clear()
+        self.sink.clear()
 
     def start(self, envelope_stream: DataFrame, checkpoint_dir: str):
         """Attach to an envelope stream and run."""

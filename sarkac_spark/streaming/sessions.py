@@ -4,10 +4,10 @@ batch ``operators/sessions.py::session_stats``.
 Spark-first: the keyed gap-merge state machine is Spark's NATIVE
 ``F.session_window(ts, gap)`` (event-time windows that merge while open,
 backed by the streaming state store), not a hand-rolled stateful op.
-The pipeline only adds the store discipline every other streaming
-pipeline here uses: append-mode finalized sessions land in a
-replay-safe per-epoch parquet store (epoch overwrite — a post-commit
-replay rewrites its own partition instead of duplicating rows).
+The pipeline only adds the store every other streaming pipeline here
+uses: append-mode finalized sessions land in a replay-safe
+``storeutil.EpochStore`` (epoch overwrite — a post-commit replay
+rewrites its own partition instead of duplicating rows).
 
 Semantics bridge to the batch operator (pinned by the stream≡batch
 test): ``session_window``'s window end is ``last_event_ts + gap``, so
@@ -30,10 +30,11 @@ twin to the oracle-checked batch ``sessionize``/``session_stats``.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from sarkac_spark.streaming.storeutil import EpochStore
 
 
 class StreamingSessionPipeline:
@@ -55,6 +56,7 @@ class StreamingSessionPipeline:
     ) -> None:
         self.spark = spark
         self.store_dir = store_dir
+        self._store = EpochStore(spark, store_dir)
         self.key_cols = list(key_cols)
         self.ts_col = ts_col
         self.gap_seconds = int(gap_seconds)
@@ -93,13 +95,10 @@ class StreamingSessionPipeline:
     # --- store plumbing ---------------------------------------------------
 
     def _write_epoch(self, batch: DataFrame, epoch_id: int) -> None:
-        # per-epoch overwrite: replays of epoch N rewrite epoch=N
-        # instead of appending duplicates (the ivf_maintenance
-        # commit-point discipline; append mode means rows in an epoch
-        # are final, so overwrite-in-place is the whole story here)
-        batch.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, f"epoch={epoch_id}")
-        )
+        # per-epoch overwrite: a replay of epoch N rewrites its own
+        # partition instead of appending duplicates (append mode means
+        # rows in an epoch are final, so that is the whole story here)
+        self._store.write(batch, epoch_id)
 
     def start(
         self,

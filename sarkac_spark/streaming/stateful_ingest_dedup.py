@@ -77,7 +77,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BooleanType, StructField, StructType
@@ -86,9 +85,11 @@ from sarkac_spark.operators.dedup import (
     MINHASH_MAX_BAND_DF,
     row_signatures,
 )
-from sarkac_spark.streaming.incremental_dedup import _is_empty_store_error
-from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
-from sarkac_spark.streaming.streaming_curator import apply_domain_quota
+from sarkac_spark.streaming.storeutil import BASE_EPOCH, EpochStore
+from sarkac_spark.streaming.streaming_curator import (
+    QuotaFunnelStores,
+    apply_domain_quota,
+)
 
 # State value = three PACKED little-endian numpy buffers (member ids
 # <i8, per-member set lengths <i4, concatenated shingle hashes <i8).
@@ -564,8 +565,10 @@ class StatefulDedupPipeline:
     ) -> None:
         self.spark = spark
         self.store_dir = store_dir
-        self.quota_dir = store_dir.rstrip("/") + "_quota"
-        self.funnel_dir = store_dir.rstrip("/") + "_funnel"
+        self._text = EpochStore(spark, store_dir)
+        self._counts = QuotaFunnelStores(spark, store_dir, domain_cap)
+        self.quota_dir = self._counts.quota.path
+        self.funnel_dir = self._counts.funnel.path
         self.id_col = id_col
         self.text_col = text_col
         self.minhash = minhash
@@ -794,26 +797,14 @@ class StatefulDedupPipeline:
                     self.spark.streams.removeListener(listener)
             q.awaitTermination()
 
-        # batch base layer for the downstream stores (epoch=-1: the
-        # compact() shape — never collides with a checkpoint epoch, and
-        # the replay-safety ``epoch != current`` filter never excludes it)
-        corpus_df.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, "epoch=-1")
-        )
+        # batch base layer for the downstream stores (the compact()
+        # shape — never collides with a checkpoint epoch, and the
+        # replay-safety ``epoch != current`` filter never excludes it)
+        self._text.write(corpus_df, BASE_EPOCH)
         counts = [("input", n_docs), ("dedup", n_docs)]
         if self.domain_cap is not None:
-            domain_col = self.domain_cap.get("domain_col", "source")
-            corpus_df.groupBy(domain_col).agg(
-                F.count(F.lit(1)).alias("n_admitted")
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.quota_dir, "epoch=-1")
-            )
             counts.append(("domain_cap", n_docs))
-        self.spark.createDataFrame(
-            counts, "stage string, n_docs long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.funnel_dir, "epoch=-1")
-        )
+        self._counts.write(BASE_EPOCH, counts, corpus_df)
         return n_docs
 
     def commit_batch(self, verdicts: DataFrame, epoch_id: int) -> None:
@@ -846,25 +837,13 @@ class StatefulDedupPipeline:
         if self.domain_cap is not None:
             kept = apply_domain_quota(
                 kept,
-                self._prior_quota(exclude_epoch=epoch_id),
+                self._counts.prior_quota(exclude_epoch=epoch_id),
                 self.domain_cap,
                 self.id_col,
             ).localCheckpoint(eager=True)
             counts.append(("domain_cap", kept.count()))
-            domain_col = self.domain_cap.get("domain_col", "source")
-            kept.groupBy(domain_col).agg(
-                F.count(F.lit(1)).alias("n_admitted")
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.quota_dir, f"epoch={epoch_id}")
-            )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(self.store_dir, f"epoch={epoch_id}")
-        )
-        self.spark.createDataFrame(
-            counts, "stage string, n_docs long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.funnel_dir, f"epoch={epoch_id}")
-        )
+        self._text.write(kept, epoch_id)
+        self._counts.write(epoch_id, counts, kept)
 
     def start(
         self,
@@ -896,26 +875,6 @@ class StatefulDedupPipeline:
 
     # --- reads / maintenance -------------------------------------------------
 
-    def _read_or_none(self, path: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException as e:
-            if _is_empty_store_error(e):
-                raise_if_half_swapped(path)
-                return None
-            raise
-
-    def _prior_quota(self, exclude_epoch: int) -> DataFrame | None:
-        q = self._read_or_none(self.quota_dir)
-        if q is None or self.domain_cap is None:
-            return None
-        domain_col = self.domain_cap.get("domain_col", "source")
-        return (
-            q.filter(F.col("epoch") != exclude_epoch)
-            .groupBy(domain_col)
-            .agg(F.sum("n_admitted").alias("__prior"))
-        )
-
     def committed(self) -> DataFrame:
         """The deduped corpus so far (full input schema)."""
         return self.spark.read.parquet(self.store_dir).drop("epoch")
@@ -936,47 +895,8 @@ class StatefulDedupPipeline:
         the ``IncrementalDedupPipeline.compact`` contract). Band state
         needs NO compaction: RocksDB/HDFS state files are maintained by
         the streaming checkpoint itself. ``target_partitions=None``
-        auto-sizes the folded text store (~250k rows per file) so
-        later scans keep their parallelism at any corpus size."""
-        n_docs = 0
-        docs = self._read_or_none(self.store_dir)
-        if docs is not None:
-            folded = docs.drop("epoch")
-            n_docs = folded.count()
-            # None => auto-size (~250k rows/file, ceil so the target is
-            # an upper bound); explicit ints are clamped, matching
-            # IncrementalDedupPipeline.compact (0 must not fall through
-            # to auto-sizing)
-            if target_partitions is None:
-                parts = max(1, -(-n_docs // 250_000))
-            else:
-                parts = max(1, int(target_partitions))
-            tmp = self.store_dir.rstrip("/") + ".compact"
-            folded.repartition(parts).write.mode("overwrite").parquet(
-                os.path.join(tmp, "epoch=-1")
-            )
-            atomic_swap(tmp, self.store_dir)
-        q = self._read_or_none(self.quota_dir)
-        if q is not None:
-            fold_cols = [c for c in q.columns if c not in ("n_admitted", "epoch")]
-            folded = (
-                q.drop("epoch")
-                .groupBy(*fold_cols)
-                .agg(F.sum("n_admitted").alias("n_admitted"))
-                .coalesce(1)
-            )
-            tmp = self.quota_dir + ".compact"
-            folded.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=-1"))
-            atomic_swap(tmp, self.quota_dir)
-        f = self._read_or_none(self.funnel_dir)
-        if f is not None:
-            folded = (
-                f.drop("epoch")
-                .groupBy("stage")
-                .agg(F.sum("n_docs").alias("n_docs"))
-                .coalesce(1)
-            )
-            tmp = self.funnel_dir + ".compact"
-            folded.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=-1"))
-            atomic_swap(tmp, self.funnel_dir)
+        auto-sizes the folded text store (``storeutil.ROWS_PER_FILE``)
+        so later scans keep their parallelism at any corpus size."""
+        n_docs = self._text.compact(partitions=target_partitions)
+        self._counts.compact()
         return n_docs

@@ -28,13 +28,11 @@ summed stream funnel equals the batch report when the survivor sets
 match.
 
 Exactly-once under at-least-once replay: every store (text, signatures,
-quota, funnel) follows the per-epoch-overwrite discipline, and every
-read that feeds a VERDICT excludes the current epoch's partition — a
-replayed batch recomputes identical verdicts and rewrites its own
-partitions instead of double-counting (the
-``IncrementalDedupPipeline`` / ``IvfMaintenancePipeline`` store
-contract). Same PRECONDITION: document ids are unique across the
-stream.
+quota, funnel) is a ``storeutil.EpochStore`` — per-epoch overwrite, and
+every read that feeds a VERDICT excludes the current epoch's partition,
+so a replayed batch recomputes identical verdicts and rewrites its own
+partitions instead of double-counting. Same PRECONDITION as every
+ingest store: document ids are unique across the stream.
 
 100 TB shape, per trigger: the quality gates are map-only; dedup scans
 signature-sized corpus data (band-df-capped); the quota reads the
@@ -48,17 +46,11 @@ checkpoint.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from sarkac_spark.streaming.incremental_dedup import (
-    IncrementalDedupPipeline,
-    _is_empty_store_error,
-)
-from sarkac_spark.streaming.storeutil import atomic_swap, raise_if_half_swapped
+from sarkac_spark.streaming.incremental_dedup import IncrementalDedupPipeline
+from sarkac_spark.streaming.storeutil import BASE_EPOCH, EpochStore
 
 _ALLOWED_STAGES = {"quality", "dedup", "domain_cap"}
 
@@ -98,6 +90,64 @@ def apply_domain_quota(
     ).drop("__rn", "__prior")
 
 
+class QuotaFunnelStores:
+    """The two count stores both ingest engines keep beside their
+    corpus: per-(epoch, domain) admission counts (``store_dir +
+    "_quota"``, read back as ``apply_domain_quota``'s ``prior``) and
+    the per-epoch funnel (``+ "_funnel"``: epoch, stage, n_docs)."""
+
+    def __init__(
+        self, spark: SparkSession, store_dir: str, domain_cap: dict | None
+    ) -> None:
+        self.spark = spark
+        self.quota = EpochStore(spark, store_dir.rstrip("/") + "_quota")
+        self.funnel = EpochStore(spark, store_dir.rstrip("/") + "_funnel")
+        self.capped = domain_cap is not None
+        self.domain_col = (domain_cap or {}).get("domain_col", "source")
+
+    def prior_quota(self, exclude_epoch: int) -> DataFrame | None:
+        """Committed per-domain admission totals, excluding the current
+        epoch's partition (replay safety)."""
+        q = self.quota.read(exclude_epoch=exclude_epoch)
+        if q is None:
+            return None
+        return q.groupBy(self.domain_col).agg(F.sum("n_admitted").alias("__prior"))
+
+    def write(
+        self, epoch_id: int, counts: list[tuple[str, int]], admitted: DataFrame
+    ) -> None:
+        """Commit one epoch's funnel ``counts`` and, under a domain cap,
+        the per-domain counts of its ``admitted`` docs."""
+        if self.capped:
+            self.quota.write(
+                admitted.groupBy(self.domain_col).agg(
+                    F.count(F.lit(1)).alias("n_admitted")
+                ),
+                epoch_id,
+            )
+        self.funnel.write(
+            self.spark.createDataFrame(counts, "stage string, n_docs long").coalesce(1),
+            epoch_id,
+        )
+
+    def compact(self) -> None:
+        """Fold quota rows to one summed row per domain and funnel rows
+        to one summed row per stage. The quota folds by the store's OWN
+        domain column (everything but the count), so a store left over
+        from an earlier configuration compacts even if ``domain_cap``
+        was since removed."""
+        self.quota.compact(
+            lambda q: q.groupBy(*[c for c in q.columns if c != "n_admitted"]).agg(
+                F.sum("n_admitted").alias("n_admitted")
+            ),
+            partitions=1,
+        )
+        self.funnel.compact(
+            lambda f: f.groupBy("stage").agg(F.sum("n_docs").alias("n_docs")),
+            partitions=1,
+        )
+
+
 class StreamingCuratorPipeline:
     """``config`` takes the ``Curator`` config shape, restricted to the
     stages with a streaming member: ``quality`` (any Curator quality
@@ -111,11 +161,10 @@ class StreamingCuratorPipeline:
     either need a second full relation per trigger or reshape the
     output schema — run them as a batch pass over ``committed()``.
 
-    Stores under ``store_dir`` (all plain partitioned parquet,
-    epoch=N partitions): the committed corpus (full input schema), its
-    dedup signatures (``store_dir + "_sigs"``), per-(epoch, domain)
-    admission counts (``+ "_quota"``), and the per-epoch funnel
-    (``+ "_funnel"``).
+    Stores under ``store_dir`` (all ``storeutil.EpochStore`` per-epoch
+    stores): the committed corpus (full input schema), its dedup
+    signatures (``store_dir + "_sigs"``), and the ``QuotaFunnelStores``
+    (``+ "_quota"``, ``+ "_funnel"``).
 
     ``engine`` selects the dedup substrate (the sigma facade's
     ``engine`` switch, applied to ingest curation):
@@ -158,8 +207,10 @@ class StreamingCuratorPipeline:
             )
         self.spark = spark
         self.store_dir = store_dir
-        self.quota_dir = store_dir.rstrip("/") + "_quota"
-        self.funnel_dir = store_dir.rstrip("/") + "_funnel"
+        self._text = EpochStore(spark, store_dir)
+        self._counts = QuotaFunnelStores(spark, store_dir, config.get("domain_cap"))
+        self.quota_dir = self._counts.quota.path
+        self.funnel_dir = self._counts.funnel.path
         self.config = config
         self.id_col = id_col
         self.text_col = text_col
@@ -203,15 +254,6 @@ class StreamingCuratorPipeline:
 
     # --- stores -------------------------------------------------------------
 
-    def _read_or_none(self, path: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException as e:
-            if _is_empty_store_error(e):
-                raise_if_half_swapped(path)
-                return None
-            raise
-
     def committed(self) -> DataFrame:
         """The curated corpus so far (full input schema)."""
         return self.spark.read.parquet(self.store_dir).drop("epoch")
@@ -221,27 +263,13 @@ class StreamingCuratorPipeline:
         names matching ``Curator.report()``."""
         return self.spark.read.parquet(self.funnel_dir)
 
-    def _prior_quota(self, exclude_epoch: int) -> DataFrame | None:
-        """Committed per-domain admission totals, excluding the current
-        epoch's partition (replay safety — the quota twin of
-        ``_read_sigs``)."""
-        q = self._read_or_none(self.quota_dir)
-        if q is None:
-            return None
-        domain_col = self.config["domain_cap"].get("domain_col", "source")
-        return (
-            q.filter(F.col("epoch") != exclude_epoch)
-            .groupBy(domain_col)
-            .agg(F.sum("n_admitted").alias("__prior"))
-        )
-
     def _quota(self, kept: DataFrame, epoch_id: int) -> DataFrame:
         # the shared admission rule (see apply_domain_quota): within-
         # batch quality-then-id ranking against the committed running
         # counts, replay-safe because the prior read excludes this epoch
         return apply_domain_quota(
             kept,
-            self._prior_quota(exclude_epoch=epoch_id),
+            self._counts.prior_quota(exclude_epoch=epoch_id),
             self.config["domain_cap"],
             self.id_col,
         )
@@ -274,17 +302,7 @@ class StreamingCuratorPipeline:
         admitted = self._dedup.commit_batch(d, epoch_id)
         if "domain_cap" in self.config:
             counts.append(("domain_cap", admitted.count()))
-            domain_col = self.config["domain_cap"].get("domain_col", "source")
-            admitted.groupBy(domain_col).agg(
-                F.count(F.lit(1)).alias("n_admitted")
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.quota_dir, f"epoch={epoch_id}")
-            )
-        self.spark.createDataFrame(
-            counts, "stage string, n_docs long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.funnel_dir, f"epoch={epoch_id}")
-        )
+        self._counts.write(epoch_id, counts, admitted)
 
     # --- lifecycle ----------------------------------------------------------
 
@@ -356,9 +374,9 @@ class StreamingCuratorPipeline:
 
         Returns the number of docs committed by the backfill."""
         if self._stateful is None:
-            store = self._read_or_none(self.store_dir)
+            store = self._text.read()
             if store is not None and not store.filter(
-                F.col("epoch") == -1
+                F.col("epoch") == BASE_EPOCH
             ).isEmpty():
                 # the stateful arm is guarded by bootstrap_state's
                 # fresh-checkpoint check; parquet must refuse here or
@@ -370,11 +388,11 @@ class StreamingCuratorPipeline:
                     "dedups against the existing state), or backfill "
                     "into a fresh store"
                 )
-            self.process_batch(corpus_df, -1)
-            store = self._read_or_none(self.store_dir)
+            self.process_batch(corpus_df, BASE_EPOCH)
+            store = self._text.read()
             return (
                 0 if store is None
-                else store.filter(F.col("epoch") == -1).count()
+                else store.filter(F.col("epoch") == BASE_EPOCH).count()
             )
         if checkpoint_dir is None or source_dir is None:
             raise ValueError(
@@ -402,7 +420,7 @@ class StreamingCuratorPipeline:
                 text_col=self.text_col,
                 minhash=(self.config.get("dedup") or {}).get("minhash"),
             )
-            d = scratch.dedup_batch(d, epoch_id=-1)
+            d = scratch.dedup_batch(d, epoch_id=BASE_EPOCH)
             if "domain_cap" in self.config:
                 d = apply_domain_quota(
                     d, None, self.config["domain_cap"], self.id_col
@@ -420,7 +438,7 @@ class StreamingCuratorPipeline:
         partition each (``epoch=-1``; the ``IncrementalDedupPipeline``
         contract — run while the stream is STOPPED). Quota rows fold to
         one summed row per domain; funnel rows fold to one summed row
-        per stage. Swaps are crash-safe (``storeutil.atomic_swap``).
+        per stage (``QuotaFunnelStores.compact``).
         Returns the compacted doc count."""
         if self._stateful is not None:
             # the keyed-state engine folds its own text/quota/funnel
@@ -428,31 +446,5 @@ class StreamingCuratorPipeline:
             # maintains it)
             return self._stateful.compact(target_partitions)
         n_docs = self._dedup.compact(target_partitions)
-        q = self._read_or_none(self.quota_dir)
-        if q is not None:
-            # fold by the store's OWN domain column (everything that
-            # isn't the count or the epoch partition) — a quota store
-            # left over from an earlier configuration must compact
-            # cleanly even if domain_cap was since removed from config.
-            fold_cols = [c for c in q.columns if c not in ("n_admitted", "epoch")]
-            folded = (
-                q.drop("epoch")
-                .groupBy(*fold_cols)
-                .agg(F.sum("n_admitted").alias("n_admitted"))
-                .coalesce(1)
-            )
-            tmp = self.quota_dir + ".compact"
-            folded.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=-1"))
-            atomic_swap(tmp, self.quota_dir)
-        f = self._read_or_none(self.funnel_dir)
-        if f is not None:
-            folded = (
-                f.drop("epoch")
-                .groupBy("stage")
-                .agg(F.sum("n_docs").alias("n_docs"))
-                .coalesce(1)
-            )
-            tmp = self.funnel_dir + ".compact"
-            folded.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=-1"))
-            atomic_swap(tmp, self.funnel_dir)
+        self._counts.compact()
         return n_docs

@@ -21,7 +21,7 @@ import re
 
 import pytest
 
-from sarkac_spark.plans.audit import executed_plan
+from sarkac_spark.plans.audit import executed_plan, plan_digest
 from sarkac_spark.queries import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -106,3 +106,17 @@ def test_detector_catches_order_only_global_window(spark):
         "rn", F.row_number().over(Window.partitionBy(F.col("id") % 7).orderBy("id"))
     )
     assert not unpartitioned_window(executed_plan(ok))
+
+
+@pytest.mark.slow  # builds the whole registry twice: minutes
+def test_every_query_digest_is_stable_across_rebuilds(spark):
+    """A digest change must mean a plan change: every registered query,
+    rebuilt in the same session, digests the same. ``profile_documents``
+    (a multi-distinct aggregate whose Expand group order follows
+    expression-id hashes) is the case this pins."""
+    queries = all_queries()
+    first = {name: plan_digest(fn(spark, SF_DIR)) for name, fn in queries.items()}
+    moved = [
+        name for name, fn in queries.items() if plan_digest(fn(spark, SF_DIR)) != first[name]
+    ]
+    assert moved == []

@@ -203,9 +203,16 @@ def test_discovery_tick_reports_topic_with_only_null_values(spark):
     """The per-topic sample collect also lists the observed topics: a
     topic whose every ``value`` is null is still created, and only the
     topics with a sample reach field discovery. It also counts the
-    batch's messages, nulls included."""
+    batch's messages, nulls included. A row without a topic names no
+    topic, but it is still a message."""
     batch = spark.createDataFrame(
-        [("t", json.dumps({"x": 1.5})), ("t", json.dumps({"x": 2.5})), ("n", None), ("n", None)],
+        [
+            ("t", json.dumps({"x": 1.5})),
+            ("t", json.dumps({"x": 2.5})),
+            ("n", None),
+            ("n", None),
+            (None, json.dumps({"y": 3.5})),
+        ],
         "topic string, value string",
     )
     sampled = []
@@ -220,7 +227,7 @@ def test_discovery_tick_reports_topic_with_only_null_values(spark):
     created = []
     bus.on("created-topics", created.append)
 
-    assert _discovery_tick(batch, loop, bus, counters) == (True, 4)
+    assert _discovery_tick(batch, loop, bus, counters) == (True, 5)
     assert created == [["n", "t"]] and counters.topic_updates == 1
     assert sampled == ["t"]
     assert ("t", "x", 900) in loop.dsl.tasks()
