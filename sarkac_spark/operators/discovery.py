@@ -19,7 +19,6 @@ from __future__ import annotations
 import hashlib
 import json
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _NUMERIC_TYPES = (
@@ -77,20 +76,6 @@ def numeric_leaf_paths_of_json(obj) -> list[str]:
 
     walk(obj, "")
     return out
-
-
-def infer_payload_schema(
-    spark: SparkSession, df: DataFrame, json_col: str, sample_rows: int = 100
-) -> T.StructType:
-    """Infer a payload schema from a bounded sample of JSON strings —
-    the batch equivalent of the reference's one-message-per-interval
-    sampling (Discovery.js:153-160). The sample is bounded so this never
-    scans the full table."""
-    sample = [r[0] for r in df.select(json_col).limit(sample_rows).collect() if r[0]]
-    rdd_free = spark.createDataFrame([(s,) for s in sample], f"{json_col} string")
-    return spark.read.json(
-        rdd_free.select(json_col).rdd.map(lambda r: r[0])
-    ).schema
 
 
 def field_list_hash(paths: list[str]) -> str:

@@ -50,31 +50,5 @@ def to_sigma_store(
 
 def dsl_field_exprs(json_col: str, paths: list[str]) -> dict[str, Column]:
     """Build the extraction map for a list of DSL paths over a JSON string
-    payload column. Each expression is an independent ``get_json_object``
-    — fine for a handful of fields; for many fields prefer
-    ``dsl_field_exprs_struct`` (one parse per row instead of one per
-    field)."""
+    payload column: one independent ``get_json_object`` per path."""
     return {p: numeric_leaf(json_col, p) for p in paths}
-
-
-def dsl_field_exprs_struct(
-    json_col: str, paths: list[str], payload_schema
-) -> dict[str, Column]:
-    """Schema-aware extraction: parse the payload ONCE with ``from_json``
-    and project every DSL path from the resulting struct — JVM-side
-    struct field access, no repeated JSON parsing. ``payload_schema``
-    comes from discovery (``infer_payload_schema``) or fixed config."""
-    from pyspark.sql import functions as F
-
-    from sarkac_spark.functions.paths import normalize_path
-
-    parsed = F.from_json(F.col(json_col), payload_schema)
-    out: dict[str, Column] = {}
-    for p in paths:
-        col: Column = parsed
-        for seg in normalize_path(p).split("."):
-            if seg == "":
-                continue
-            col = F.element_at(col, int(seg) + 1) if seg.isdigit() else col.getField(seg)
-        out[p] = col.cast("double")
-    return out

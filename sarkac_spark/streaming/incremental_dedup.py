@@ -49,15 +49,18 @@ from sarkac_spark.operators.dedup import (
     incremental_exact_dedup,
     incremental_minhash_drop_ids_sigs,
 )
-from sarkac_spark.streaming.storeutil import EpochStore
+from sarkac_spark.streaming.storeutil import EpochStore, read_bytes, write_bytes
 
 # Signature-store FORMAT version, recorded as a `_FORMAT` marker file
 # (underscore prefix: invisible to Spark's parquet reader, like
-# _SUCCESS) and checked on every read. Version 2 = sh_set carries
-# 60-bit shingle hashes; version 1 stores (mod-P values) are silently
-# incompatible — array_intersect over the disjoint value domains is
-# empty, so every near-dup would be ADMITTED with zero diagnostics.
-# The marker turns that permanent-damage scenario into a loud error.
+# _SUCCESS), written after every commit and checked on every read
+# through the session's Hadoop FileSystem (storeutil), so the guard
+# holds on every filesystem the store can live on. Version 2 = sh_set
+# carries 60-bit shingle hashes; version 1 stores (mod-P values) are
+# silently incompatible — array_intersect over the disjoint value
+# domains is empty, so every near-dup would be ADMITTED with zero
+# diagnostics. The marker turns that permanent-damage scenario into a
+# loud error.
 SIG_STORE_FORMAT = 2
 
 
@@ -93,6 +96,7 @@ class IncrementalDedupPipeline:
         self.minhash = minhash
         self._text = EpochStore(spark, self.store_dir)
         self._sigs = EpochStore(spark, self.sig_dir)
+        self._format_path = os.path.join(self.sig_dir, "_FORMAT")
 
     def _read_sigs(self, exclude_epoch: int) -> DataFrame | None:
         """Committed signature rows, excluding ``exclude_epoch``'s
@@ -109,17 +113,8 @@ class IncrementalDedupPipeline:
         """A readable store without a matching `_FORMAT` marker is a
         legacy or foreign store whose sh_set values would compare as
         disjoint — refuse it instead of admitting every near-dup."""
-        marker = os.path.join(self.sig_dir, "_FORMAT")
-        try:
-            with open(marker) as f:
-                found = f.read().strip()
-        except FileNotFoundError:
-            found = None
-        if found is None and not os.path.isdir(self.sig_dir):
-            # Spark read the store but the local FS can't see it: the
-            # store lives on HDFS/S3 etc., where this driver-local
-            # marker (like compact()'s shutil swaps) doesn't apply.
-            return
+        raw = read_bytes(self.spark, self._format_path)
+        found = None if raw is None else raw.decode().strip()
         if found != str(SIG_STORE_FORMAT):
             raise RuntimeError(
                 f"signature store {self.sig_dir!r} has format "
@@ -129,10 +124,7 @@ class IncrementalDedupPipeline:
             )
 
     def _write_sig_format(self) -> None:
-        if not os.path.isdir(self.sig_dir):
-            return  # remote FS: see _check_sig_format
-        with open(os.path.join(self.sig_dir, "_FORMAT"), "w") as f:
-            f.write(str(SIG_STORE_FORMAT))
+        write_bytes(self.spark, self._format_path, str(SIG_STORE_FORMAT).encode())
 
     def committed(self) -> DataFrame:
         """The deduped corpus so far (id, text) — what a training job

@@ -56,7 +56,6 @@ above the distribution's natural skew, same contract as the batch
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -64,6 +63,8 @@ from sarkac_spark.operators.similarity import assign_buckets, refit_ivf_centroid
 from sarkac_spark.streaming.storeutil import (
     BASE_EPOCH,
     EpochStore,
+    delete,
+    list_dir,
     read_parquet_or_none,
 )
 
@@ -236,9 +237,9 @@ class IvfMaintenancePipeline:
         self._occupancy(version).compact(_bucket_totals, partitions=1)
         # superseded centroid and occupancy versions
         for root in (self._path("centroids"), self._path("occupancy")):
-            for d in os.listdir(root) if os.path.isdir(root) else ():
+            for d, _ in list_dir(self.spark, root):
                 if d.startswith("version=") and d != f"version={version}":
-                    shutil.rmtree(os.path.join(root, d))
+                    delete(self.spark, os.path.join(root, d))
         return n
 
     def start(

@@ -73,11 +73,7 @@ def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
-def extract_fields(
-    df: DataFrame,
-    dsl: DSL,
-    payload_schemas: dict[str, object] | None = None,
-) -> DataFrame | None:
+def extract_fields(df: DataFrame, dsl: DSL) -> DataFrame | None:
     """DSL field extraction (P1-P4) over an envelope relation
     (topic, key, value: json-string, ts) — batch OR streaming (pure
     project/explode, no shuffle). Returns the long store shape
@@ -94,18 +90,11 @@ def extract_fields(
     requested"). With a single source occurrence, the same checkpoint
     carries any DSL; topics outside the DSL hit the CASE's empty-array
     default and explode drops them (the P3 topic filter, for free)."""
-    from sarkac_spark.operators.fields import dsl_field_exprs_struct
-
-    payload_schemas = payload_schemas or {}
     chain = None
     for t in dsl.topics.values():
         if not t.fields:
             continue
-        paths = [f.path for f in t.fields]
-        if t.topic in payload_schemas:
-            exprs = dsl_field_exprs_struct("value", paths, payload_schemas[t.topic])
-        else:
-            exprs = dsl_field_exprs("value", paths)
+        exprs = dsl_field_exprs("value", [f.path for f in t.fields])
         arr = F.array(
             *[
                 F.struct(
@@ -166,15 +155,10 @@ class SigmaStreamPipeline:
         spark: SparkSession,
         dsl: DSL,
         cfg: SigmaStreamConfig,
-        payload_schemas: dict[str, object] | None = None,
     ):
         self.spark = spark
         self.dsl = dsl
         self.cfg = cfg
-        # topic -> StructType: when discovery (or fixed config) provides a
-        # payload schema, extraction parses the JSON ONCE per row
-        # (from_json) instead of once per field (get_json_object)
-        self.payload_schemas = payload_schemas or {}
         self.anomaly_batches = 0
         self._tasks: tuple | None = None
         self.store = EpochStore(spark, cfg.store_dir, STORE_READ_SCHEMA)
@@ -183,7 +167,7 @@ class SigmaStreamPipeline:
     # -- step 1: DSL field extraction (P1-P4) ------------------------------
 
     def extract(self, batch: DataFrame) -> DataFrame:
-        out = extract_fields(batch, self.dsl, self.payload_schemas)
+        out = extract_fields(batch, self.dsl)
         if out is None:
             return _empty(self.spark, STORE_SCHEMA)
         return out
@@ -680,21 +664,17 @@ class StatefulSigmaPipeline:
         anomaly_dir: str,
         min_count: int = MIN_EVENTS_FOR_STATS,
         cooldown_seconds: int = ANOMALY_COOLDOWN_SECONDS,
-        payload_schemas: dict[str, object] | None = None,
     ):
         self.spark = spark
         self.dsl = dsl
         self.anomaly_dir = anomaly_dir
         self.min_count = min_count
         self.cooldown_seconds = cooldown_seconds
-        self.payload_schemas = payload_schemas or {}
 
     def anomalies(self, envelope_stream: DataFrame) -> DataFrame:
         from sarkac_spark.streaming.stateful_sigma import stateful_sigma_scan
 
-        extracted = extract_fields(
-            envelope_stream, self.dsl, self.payload_schemas
-        )
+        extracted = extract_fields(envelope_stream, self.dsl)
         if extracted is None:
             raise ValueError("DSL configures no fields")
         task_windows: dict[tuple[str, str], list[int]] = {}

@@ -85,7 +85,13 @@ from sarkac_spark.operators.dedup import (
     MINHASH_MAX_BAND_DF,
     row_signatures,
 )
-from sarkac_spark.streaming.storeutil import BASE_EPOCH, EpochStore
+from sarkac_spark.streaming.storeutil import (
+    BASE_EPOCH,
+    EpochStore,
+    exists,
+    list_dir,
+    read_bytes,
+)
 from sarkac_spark.streaming.streaming_curator import (
     QuotaFunnelStores,
     apply_domain_quota,
@@ -108,22 +114,6 @@ STATE_SCHEMA = "ids binary, lens binary, shs binary"
 _EXACT_PREFIX = "xh|"
 
 
-def _fs_entry_count(spark: SparkSession, path: str) -> int | None:
-    """Existence/size probe through the Hadoop FileSystem API, so the
-    bootstrap safety guards hold on ANY filesystem the deployment
-    actually uses (HDFS/S3/local) — ``os.path`` only sees the driver's
-    local disk. Returns ``None`` if ``path`` is absent, the child-entry
-    count for a directory, and ``-1`` for a plain file."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    if fs.getFileStatus(hpath).isDirectory():
-        return len(fs.listStatus(hpath))
-    return -1
-
-
 def _preflight_state_schema(spark: SparkSession, checkpoint_dir: str) -> None:
     """Best-effort remediation hint for pre-binary (r9 ``array<long>``)
     checkpoints: Spark's own state-schema validation fails the restart
@@ -135,21 +125,12 @@ def _preflight_state_schema(spark: SparkSession, checkpoint_dir: str) -> None:
     this guard only ever ADDS an error message, never blocks a legal
     start."""
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(
-            checkpoint_dir.rstrip("/") + "/state/0/0/_metadata/schema"
+        raw = read_bytes(
+            spark, checkpoint_dir.rstrip("/") + "/state/0/0/_metadata/schema"
         )
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return
-        stream = fs.open(hpath)
-        try:
-            raw = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
     except Exception:  # noqa: BLE001 — advisory only
+        return
+    if raw is None:
         return
     # require a POSITIVE pre-binary marker (the r9 array<long> element
     # type) on top of the binary marker being absent — a future schema
@@ -512,17 +493,6 @@ def _jaccard_np(a, b, bottom_k: int | None) -> float:
     return float(_round6(both / bottom_k))
 
 
-def _jaccard(a: frozenset, b: frozenset, bottom_k: int | None) -> float:
-    """Reference (set-based) twin of ``_jaccard_np`` — kept for tests
-    and as the readable statement of the estimator. Same 6-decimal
-    HALF_UP rounding."""
-    return _jaccard_np(
-        np.fromiter(a, dtype=np.int64) if a else np.array([], dtype=np.int64),
-        np.fromiter(b, dtype=np.int64) if b else np.array([], dtype=np.int64),
-        bottom_k,
-    )
-
-
 class StatefulDedupPipeline:
     """``minhash`` dict (``k``, ``bands``, ``threshold``, ``shingle_n``,
     ``max_band_df``, ``max_sh_set``) configures near-dup dropping; None
@@ -700,14 +670,13 @@ class StatefulDedupPipeline:
         bootstrapping (the first start pins the state partition
         count).
         """
-        if _fs_entry_count(self.spark, checkpoint_dir) is not None:
+        if exists(self.spark, checkpoint_dir):
             raise ValueError(
                 f"bootstrap_state needs a FRESH checkpoint; {checkpoint_dir!r} "
                 "exists (an existing checkpoint already has band state — "
                 "bootstrapping over it would double-install members)"
             )
-        src_entries = _fs_entry_count(self.spark, source_dir)
-        if src_entries is not None and src_entries != 0:
+        if list_dir(self.spark, source_dir):
             raise ValueError(
                 f"bootstrap_state needs an empty source_dir; {source_dir!r} "
                 "has entries (pre-existing files would enter band state "

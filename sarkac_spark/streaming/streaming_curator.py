@@ -46,6 +46,8 @@ checkpoint.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -405,33 +407,21 @@ class StreamingCuratorPipeline:
         if self._quality_fn is not None:
             d = self._quality_fn(d)
         # batch dedup with the engines' shared within-batch verdict
-        # rule: a scratch IncrementalDedupPipeline has no prior store,
-        # so dedup_batch is a pure within-corpus pass (nothing is ever
-        # written under the scratch dir)
-        import shutil
-        import tempfile
-
-        scratch_dir = tempfile.mkdtemp(prefix="backfill_scratch_")
-        try:
-            scratch = IncrementalDedupPipeline(
-                self.spark,
-                scratch_dir,
-                id_col=self.id_col,
-                text_col=self.text_col,
-                minhash=(self.config.get("dedup") or {}).get("minhash"),
-            )
-            d = scratch.dedup_batch(d, epoch_id=BASE_EPOCH)
-            if "domain_cap" in self.config:
-                d = apply_domain_quota(
-                    d, None, self.config["domain_cap"], self.id_col
-                )
-            return self._stateful.bootstrap_state(
-                d, checkpoint_dir, source_dir
-            )
-        finally:
-            # nothing is ever written under the scratch dir, but the
-            # mkdtemp itself must not leak one dir per backfill call
-            shutil.rmtree(scratch_dir, ignore_errors=True)
+        # rule: a scratch IncrementalDedupPipeline over a path that is
+        # never created reads no prior store, so dedup_batch is a pure
+        # within-corpus pass (it writes nothing). Inside source_dir, a
+        # path that can only exist where bootstrap_state refuses anyway.
+        scratch = IncrementalDedupPipeline(
+            self.spark,
+            os.path.join(source_dir, "_backfill_scratch"),
+            id_col=self.id_col,
+            text_col=self.text_col,
+            minhash=(self.config.get("dedup") or {}).get("minhash"),
+        )
+        d = scratch.dedup_batch(d, epoch_id=BASE_EPOCH)
+        if "domain_cap" in self.config:
+            d = apply_domain_quota(d, None, self.config["domain_cap"], self.id_col)
+        return self._stateful.bootstrap_state(d, checkpoint_dir, source_dir)
 
     def compact(self, target_partitions: int | None = None) -> int:
         """Fold every committed epoch of all four stores into one base

@@ -252,38 +252,6 @@ def test_windowed_stats_stream(spark, tmp_path):
     assert any(r.mean > 16 for r in out if r.field_path == "sub.one")
 
 
-def test_struct_extraction_matches_json_path(spark, tmp_path):
-    """from_json-once extraction (schema-aware) must produce the same
-    store rows as the per-field get_json_object path."""
-    from pyspark.sql import types as T
-
-    from sarkac_spark.operators.discovery import infer_payload_schema
-
-    msgs = example_messages(spark, n=48).cache()
-    schema = infer_payload_schema(spark, msgs, "value")
-    assert isinstance(schema, T.StructType)
-
-    cfg_a = SigmaStreamConfig(
-        store_dir=str(tmp_path / "sa"), anomaly_dir=str(tmp_path / "aa")
-    )
-    cfg_b = SigmaStreamConfig(
-        store_dir=str(tmp_path / "sb"), anomaly_dir=str(tmp_path / "ab")
-    )
-    p_json = SigmaStreamPipeline(spark, DSL_FIXTURE, cfg_a)
-    p_struct = SigmaStreamPipeline(
-        spark, DSL_FIXTURE, cfg_b, payload_schemas={TOPIC: schema}
-    )
-    a = sorted(
-        (r.topic, r.field_path, r.key, r.value)
-        for r in p_json.extract(msgs).collect()
-    )
-    b = sorted(
-        (r.topic, r.field_path, r.key, r.value)
-        for r in p_struct.extract(msgs).collect()
-    )
-    assert a == b and len(a) == 96  # two fields x 48 messages
-
-
 def test_rate_source_synthetic_stream(spark):
     """S8 streaming variant: the rate-source generator produces live
     envelope rows with the reference's payload sequence."""
