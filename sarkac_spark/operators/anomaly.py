@@ -27,6 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from sarkac_spark.config import MIN_EVENTS_FOR_STATS, humanize_duration
+from sarkac_spark.functions.sqltext import epoch_us, ident
 from sarkac_spark.operators.stats import trailing_window_stats
 from sarkac_spark.plans.audit import lazy_checkpoint
 
@@ -40,13 +41,8 @@ def score_three_sigma(
 ) -> DataFrame:
     """Attach the 3-sigma score; rows with stddev<=0 get NULL (the
     reference's Infinity guard, DSLHandler.js:194-197)."""
-    return df.withColumn(
-        out_col,
-        F.when(
-            F.col(stddev_col) > 0,
-            (F.col(value_col) - F.col(mean_col)) / (F.lit(3.0) * F.col(stddev_col)),
-        ),
-    )
+    v, m, s = ident(value_col), ident(mean_col), ident(stddev_col)
+    return df.withColumn(out_col, F.expr(f"CASE WHEN {s} > 0 THEN ({v} - {m}) / (3.0D * {s}) END"))
 
 
 def sigma_scan(
@@ -82,7 +78,7 @@ def sigma_scan(
     scored against the cached stats, never re-scored).
     """
     group_cols = list(group_cols)
-    as_of = df.agg(F.max(ts_col).alias("__as_of"))
+    as_of = df.selectExpr(f"max({ident(ts_col)}) AS __as_of")
     facts = df.crossJoin(F.broadcast(as_of))
     if score_df is None:
         # facts feeds the stats aggregation AND the scoring target —
@@ -95,7 +91,7 @@ def sigma_scan(
         # scan — result-identical, and the materialized relation skips
         # unjoinable rows.
         for g in group_cols:
-            facts = facts.filter(F.col(g).isNotNull())
+            facts = facts.filter(f"{ident(g)} IS NOT NULL")
         facts = facts.transform(lazy_checkpoint)
     stats = trailing_window_stats(
         facts,
@@ -109,41 +105,41 @@ def sigma_scan(
 
     target = facts if score_df is None else score_df.crossJoin(F.broadcast(as_of))
     joined = target.join(F.broadcast(stats), on=group_cols, how="inner")
-    # window length is a *column* after the stats unpivot, so the in-window
-    # predicate compares epoch micros against window_seconds * 1e6 directly.
-    in_win = F.unix_micros(F.col(ts_col).cast("timestamp")) >= (
-        F.unix_micros(F.col("__as_of").cast("timestamp"))
-        - F.col("window_seconds") * F.lit(1_000_000)
+    # The rest is fixed-shape projection over identifiers and numbers,
+    # so each step is one SQL string (one py4j call; sqltext). Window
+    # length is a *column* after the stats unpivot, so the in-window
+    # predicate compares epoch micros against window_seconds * 1e6.
+    in_win = f"{epoch_us(ident(ts_col))} >= {epoch_us('__as_of')} - window_seconds * 1000000"
+    scored = score_three_sigma(joined.filter(in_win), value_col=value_col).filter(
+        "abs(three_sigma) > 1.0D"
     )
-    scored = score_three_sigma(
-        joined.filter(in_win), value_col=value_col
-    ).filter(F.abs(F.col("three_sigma")) > 1.0)
 
-    rnd = (lambda c: F.round(c, round_digits)) if round_digits is not None else (lambda c: c)
+    def rnd(c: str) -> str:
+        return c if round_digits is None else f"round({c}, {int(round_digits)})"
+
     # humanWindow is a tiny driver-side lookup over the configured window
-    # list — expressed as a chained CASE so it stays inside codegen.
-    human = F.lit(None).cast("string")
+    # list — expressed as a chained CASE so it stays inside codegen. Its
+    # labels are humanize_duration's digits-and-unit output, not user text.
+    human = "CAST(NULL AS STRING)"
     for w in sorted(set(windows)):
-        human = F.when(F.col("window_seconds") == w, F.lit(humanize_duration(w))).otherwise(human)
+        human = f"CASE WHEN window_seconds = {int(w)} THEN '{humanize_duration(w)}' ELSE {human} END"
 
-    path_expr = F.col(path_col) if path_col is not None else F.lit(path)
-    ts_cols = (
-        [F.unix_micros(F.col(ts_col).cast("timestamp")).alias("event_ts_us")]
-        if keep_ts
-        else []
-    )
-    return scored.select(
+    if path_col is None:
+        # a caller's label: a Column literal, never SQL text
+        scored = scored.withColumn("__path", F.lit(path))
+    ts_cols = [f"{epoch_us(ident(ts_col))} AS event_ts_us"] if keep_ts else []
+    return scored.selectExpr(
         *ts_cols,
-        F.col(group_cols[0]).alias("topic"),
-        path_expr.alias("path"),
-        F.col("window_seconds"),
-        human.alias("human_window"),
-        F.col(value_col).alias("value"),
-        rnd(F.col("mean")).alias("median"),
-        rnd(F.col("stddev_pop")).alias("std_dev"),
-        rnd(F.col("three_sigma")).alias("three_sigma"),
+        f"{ident(group_cols[0])} AS topic",
+        f"{ident(path_col or '__path')} AS path",
+        "window_seconds",
+        f"{human} AS human_window",
+        f"{ident(value_col)} AS value",
+        f"{rnd('mean')} AS median",
+        f"{rnd('stddev_pop')} AS std_dev",
+        f"{rnd('three_sigma')} AS three_sigma",
         *[
-            F.col(c)
+            ident(c)
             for c in df.columns
             if c not in (value_col, ts_col, path_col, *group_cols)
         ],

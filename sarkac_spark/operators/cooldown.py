@@ -24,14 +24,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from sarkac_spark.config import ANOMALY_COOLDOWN_SECONDS
+from sarkac_spark.functions.sqltext import epoch_us, ident
 
 
-def _epoch_us(df: DataFrame, ts_col: str):
-    """Epoch-microseconds column: long columns pass through (already
+def _epoch_us(df: DataFrame, ts_col: str) -> str:
+    """Epoch-microseconds SQL: long columns pass through (already
     epoch-us, e.g. sigma_scan's ``event_ts_us``); timestamps convert."""
     if dict(df.dtypes)[ts_col] in ("bigint", "int", "long"):
-        return F.col(ts_col)
-    return F.unix_micros(F.col(ts_col).cast("timestamp"))
+        return ident(ts_col)
+    return epoch_us(ident(ts_col))
 
 
 def cooldown_bucketed(
@@ -46,7 +47,7 @@ def cooldown_bucketed(
     "earliest" is deterministic for oracle comparison."""
     # bucket start in epoch-us — pure integer arithmetic, so the DuckDB
     # oracle (epoch_us - epoch_us % N) is bit-identical
-    epoch = _epoch_us(anomalies, ts_col)
+    epoch = F.expr(_epoch_us(anomalies, ts_col))
     bucket = epoch - (epoch % F.lit(cooldown_seconds * 1_000_000))
     w = W.partitionBy(*key_cols, bucket).orderBy(epoch, *tiebreak_cols)
     return (
@@ -74,20 +75,20 @@ def cooldown_exact(
     carrying (last emit, kept rows). Appending to the kept array costs
     O(k^2) in k, the key's anomalies per call: fine while anomalies are
     rare (the streaming engine's k is capped by ``maxOffsetsPerTrigger``)."""
-    cols = anomalies.columns
-    row = F.struct(_epoch_us(anomalies, ts_col).alias("__t"), *cols)
-    rows = anomalies.groupBy(*key_cols).agg(F.array_sort(F.collect_list(row)).alias("__rows"))
-    last = F.lit(None).cast("long")
+    cols = ", ".join(map(ident, anomalies.columns))
+    # (ts, row) structs sort by ts, then by the whole row
+    row = f"struct({_epoch_us(anomalies, ts_col)} AS __t, struct({cols}) AS __row)"
+    rows = anomalies.groupBy(*key_cols).agg(F.expr(f"array_sort(collect_list({row})) AS __rows"))
+    last = "CAST(NULL AS BIGINT)"
     if seed is not None:
-        rows = rows.join(seed.select(*key_cols, "last_emit_us"), list(key_cols), "left")
-        last = F.col("last_emit_us")
-    cd_us = cooldown_seconds * 1_000_000
-
-    def step(acc, x):
-        emit = acc["last"].isNull() | (x["__t"] - acc["last"] >= cd_us)
-        taken = F.struct(x["__t"].alias("last"), F.concat(acc["kept"], F.array(x)).alias("kept"))
-        return F.when(emit, taken).otherwise(acc)
-
-    start = F.struct(last.alias("last"), F.filter("__rows", lambda x: F.lit(False)).alias("kept"))
-    kept = F.explode(F.aggregate("__rows", start, step, lambda acc: acc["kept"]))
-    return rows.select(kept.alias("__r")).select(*[F.col("__r")[c].alias(c) for c in cols])
+        keys = [ident(k) for k in (*key_cols, "last_emit_us")]
+        rows = rows.join(seed.selectExpr(*keys), list(key_cols), "left")
+        last = "last_emit_us"
+    emit = f"acc.last IS NULL OR x.__t - acc.last >= {int(cooldown_seconds) * 1_000_000}"
+    taken = "struct(x.__t AS last, concat(acc.kept, array(x.__row)) AS kept)"
+    none_kept = "transform(filter(__rows, x -> false), x -> x.__row)"  # typed empty array
+    walk = (
+        f"aggregate(__rows, struct({last} AS last, {none_kept} AS kept), "
+        f"(acc, x) -> CASE WHEN {emit} THEN {taken} ELSE acc END, acc -> acc.kept)"
+    )
+    return rows.selectExpr(f"inline({walk})")

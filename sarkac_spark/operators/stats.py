@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from sarkac_spark.config import MIN_EVENTS_FOR_STATS
+from sarkac_spark.functions.sqltext import epoch_us, ident
 
 
 def with_as_of(
@@ -45,13 +46,17 @@ def with_as_of(
     return df.crossJoin(F.broadcast(as_of))
 
 
-def _in_window(ts_col: str, as_of_col: str, window_seconds: int) -> Column:
+def _in_window_sql(ts_col: str, as_of_col: str, window_seconds: int) -> str:
     # epoch-microsecond arithmetic: exact, type-stable, and identical to
     # the DuckDB oracle's `epoch_us(ts) >= epoch_us(as_of) - w*1e6`.
-    return F.unix_micros(F.col(ts_col).cast("timestamp")) >= (
-        F.unix_micros(F.col(as_of_col).cast("timestamp"))
-        - F.lit(window_seconds * 1_000_000)
+    return (
+        f"{epoch_us(ident(ts_col))} >= "
+        f"{epoch_us(ident(as_of_col))} - {int(window_seconds) * 1_000_000}"
     )
+
+
+def _in_window(ts_col: str, as_of_col: str, window_seconds: int) -> Column:
+    return F.expr(_in_window_sql(ts_col, as_of_col, window_seconds))
 
 
 def trailing_window_stats(
@@ -78,10 +83,12 @@ def trailing_window_stats(
 
     aggs: list[Column] = []
     for w in windows:
-        cond_val = F.when(_in_window(ts_col, as_of_col, w), F.col(value_col))
-        aggs.append(F.avg(cond_val).alias(f"__mean_{w}"))
-        aggs.append(F.stddev_pop(cond_val).alias(f"__std_{w}"))
-        aggs.append(F.count(cond_val).alias(f"__n_{w}"))
+        # one SQL string per aggregate: a streaming trigger rebuilds
+        # this plan, and a Column chain costs a py4j call per step
+        cond_val = f"CASE WHEN {_in_window_sql(ts_col, as_of_col, w)} THEN {ident(value_col)} END"
+        aggs.append(F.expr(f"avg({cond_val}) AS __mean_{w}"))
+        aggs.append(F.expr(f"stddev_pop({cond_val}) AS __std_{w}"))
+        aggs.append(F.expr(f"count({cond_val}) AS __n_{w}"))
 
     wide = df.groupBy(*group_cols).agg(*aggs)
 
@@ -92,7 +99,7 @@ def trailing_window_stats(
         *group_cols,
         f"stack({len(windows)}, {stack_args}) AS (window_seconds, mean, stddev_pop, n)",
     )
-    return stacked.filter(F.col("n") >= min_count)
+    return stacked.filter(f"n >= {int(min_count)}")
 
 
 def trailing_percentiles(

@@ -269,7 +269,7 @@ def _discovery_tick(batch: DataFrame, discovery, bus, counters) -> tuple[bool, i
     and the batch's message count."""
     from pyspark.sql import functions as F
 
-    by_topic = batch.groupBy("topic").agg(F.first("value").alias("value"), F.count("*").alias("n"))
+    by_topic = batch.groupBy("topic").agg(F.expr("first(value) AS value"), F.expr("count(*) AS n"))
     rows = by_topic.collect()
     # a null topic names no topic: its rows count as messages but take
     # no part in the topic diff or field discovery
@@ -296,8 +296,9 @@ class _BusSigmaPipeline(SigmaStreamPipeline):
     discovery tick inline.
 
     Live discovery needs NO query restart here: ``foreachBatch``
-    re-plans extraction from ``self.dsl`` every micro-batch, so a DSL
-    merged from a discovered topic/field takes effect on the next batch.
+    re-plans extraction from ``self.dsl`` every micro-batch, and the
+    discovery tick runs first, so a DSL merged from a discovered
+    topic/field already extracts and scores the batch it was found in.
     (The reference must juggle consumer re-subscription, Stream.js:145-152;
     a restart is only needed for an explicit-topic-list *source* change —
     ``subscribePattern`` sources don't even need that.)
@@ -334,7 +335,7 @@ class _BusSigmaPipeline(SigmaStreamPipeline):
             if self.discovery is None:
                 n_msgs = batch.count()
             else:
-                # on change the next batch re-plans extraction with the
+                # on change this batch is already extracted with the
                 # merged DSL (no restart needed in the foreachBatch engine)
                 changed, n_msgs = _discovery_tick(batch, self.discovery, self.bus, self.counters)
                 if changed:

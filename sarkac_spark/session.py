@@ -13,6 +13,15 @@ large cluster for the 100 TB target:
   we read it as a long and convert (see ``sources.tables``).
 - ``local[...]`` masters boot Python workers from ``worker_daemon``, with
   this package on their PYTHONPATH (see that module for why).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: with it on,
+  PySpark captures the Python call site of every ``functions.*`` and
+  ``Column`` call and sends it to the JVM, about five extra py4j round
+  trips per call; a streaming trigger that rebuilds its plan pays that
+  thousands of times. The cost of turning it off: an analysis error
+  no longer names the Python line whose DataFrame call caused it.
+  Opt back in with ``extra_conf={DATAFRAME_DEBUGGING: "true"}``. PySpark
+  reads the flag once per process, at its first decorated call, so it
+  has to be set when the session is built, not later.
 """
 
 from __future__ import annotations
@@ -26,6 +35,7 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -74,6 +84,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # call-site capture off (module docstring); extra_conf may override
+        .config(DATAFRAME_DEBUGGING, "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if rocksdb_state is None:

@@ -45,7 +45,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 
 from sarkac_spark.config import (
     ANOMALY_COOLDOWN_SECONDS,
@@ -73,12 +73,11 @@ def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
-def extract_fields(df: DataFrame, dsl: DSL) -> DataFrame | None:
-    """DSL field extraction (P1-P4) over an envelope relation
-    (topic, key, value: json-string, ts) — batch OR streaming (pure
-    project/explode, no shuffle). Returns the long store shape
-    (topic, produced, key, field_path, value), or None with no
-    configured fields.
+def extraction_columns(dsl: DSL) -> list[Column] | None:
+    """The projection of DSL field extraction (P1-P4) over an envelope
+    relation (topic, key, value: json-string, ts): topic, ``ts`` as
+    produced, key, and ``__fv``, one row per configured (field_path,
+    value) struct of the row's topic. None with no configured fields.
 
     ONE pass, ONE branch: a per-topic CASE maps each row to its
     configured (field_path, value) struct array, exploded in a single
@@ -89,7 +88,12 @@ def extract_fields(df: DataFrame, dsl: DSL) -> DataFrame | None:
     broke restart ("N sources in the checkpoint offsets, now M
     requested"). With a single source occurrence, the same checkpoint
     carries any DSL; topics outside the DSL hit the CASE's empty-array
-    default and explode drops them (the P3 topic filter, for free)."""
+    default and explode drops them (the P3 topic filter, for free).
+
+    Topic names and paths are DSL text, so they enter the plan only as
+    Column literals, never as SQL text. Building these Columns costs
+    hundreds of py4j calls; a caller that extracts every trigger keeps
+    them per DSL (``SigmaStreamPipeline._extraction``)."""
     chain = None
     for t in dsl.topics.values():
         if not t.fields:
@@ -109,22 +113,32 @@ def extract_fields(df: DataFrame, dsl: DSL) -> DataFrame | None:
     if chain is None:
         return None
     empty = F.array().cast("array<struct<field_path:string,value:double>>")
+    return [
+        F.col("topic"),
+        F.col("ts").alias("produced"),
+        F.col("key"),
+        F.explode(chain.otherwise(empty)).alias("__fv"),
+    ]
+
+
+def extract_with(df: DataFrame, columns: list[Column]) -> DataFrame:
+    """Apply ``extraction_columns`` to ``df``: the long store shape
+    (topic, produced, key, field_path, value), missing fields dropped."""
     return (
-        df.select(
-            "topic",
-            F.col("ts").alias("produced"),
-            "key",
-            F.explode(chain.otherwise(empty)).alias("__fv"),
+        df.select(*columns)
+        .selectExpr(
+            "topic", "produced", "key", "__fv.field_path AS field_path", "__fv.value AS value"
         )
-        .select(
-            "topic",
-            "produced",
-            "key",
-            F.col("__fv.field_path").alias("field_path"),
-            F.col("__fv.value").alias("value"),
-        )
-        .filter(F.col("value").isNotNull())
+        .filter("value IS NOT NULL")
     )
+
+
+def extract_fields(df: DataFrame, dsl: DSL) -> DataFrame | None:
+    """DSL field extraction over an envelope relation — batch OR
+    streaming (pure project/explode, no shuffle): ``extract_with`` over
+    a fresh ``extraction_columns(dsl)``. None with no configured fields."""
+    columns = extraction_columns(dsl)
+    return None if columns is None else extract_with(df, columns)
 
 
 @dataclass
@@ -161,16 +175,28 @@ class SigmaStreamPipeline:
         self.cfg = cfg
         self.anomaly_batches = 0
         self._tasks: tuple | None = None
+        self._fields: tuple | None = None
         self.store = EpochStore(spark, cfg.store_dir, STORE_READ_SCHEMA)
         self.sink = EpochStore(spark, cfg.anomaly_dir, SINK_READ_SCHEMA)
 
     # -- step 1: DSL field extraction (P1-P4) ------------------------------
 
+    def _extraction(self) -> list[Column] | None:
+        """``extraction_columns`` of the current DSL, rebuilt only when
+        discovery changes its topics or paths."""
+        fields = tuple(
+            (t.topic, tuple(f.path for f in t.fields)) for t in self.dsl.topics.values()
+        )
+        if self._fields != fields:
+            self._fields = fields
+            self._extract_columns = extraction_columns(self.dsl)
+        return self._extract_columns
+
     def extract(self, batch: DataFrame) -> DataFrame:
-        out = extract_fields(batch, self.dsl)
-        if out is None:
+        columns = self._extraction()
+        if columns is None:
             return _empty(self.spark, STORE_SCHEMA)
-        return out
+        return extract_with(batch, columns)
 
     # -- steps 2-6 ----------------------------------------------------------
 
@@ -187,7 +213,7 @@ class SigmaStreamPipeline:
         sink = self.sink.read(before_epoch=epoch_id)
         if sink is None:
             return None
-        return sink.groupBy(*SERIES).agg(F.max("event_ts_us").alias("last_emit_us"))
+        return sink.groupBy(*SERIES).agg(F.expr("max(event_ts_us) AS last_emit_us"))
 
     def _task_filter(self):
         """(topic, path, window) in the DSL's tasks, as a JVM literal

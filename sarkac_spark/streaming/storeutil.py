@@ -69,7 +69,7 @@ import os
 from collections.abc import Callable, Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 # the base layer a fold writes: below every checkpoint epoch id
 BASE_EPOCH = -1
@@ -287,9 +287,9 @@ class EpochStore:
         if df is None:
             return None
         if exclude_epoch is not None:
-            df = df.filter(F.col("epoch") != exclude_epoch)
+            df = df.filter(f"epoch != {int(exclude_epoch)}")
         if before_epoch is not None:
-            df = df.filter(F.col("epoch") < before_epoch)
+            df = df.filter(f"epoch < {int(before_epoch)}")
         return df
 
     def compact(

@@ -63,6 +63,30 @@ def test_sarkac_analyse_lifecycle(spark, tmp_path):
     assert st["storedEvents"] == 96 * 2  # two fields per message
 
 
+def test_discovered_fields_are_stored_from_their_first_epoch(spark, tmp_path):
+    """The discovery tick runs before extraction, so fields found in
+    epoch 0 are already in the store's epoch=0 partition: the pipeline's
+    kept extraction Columns follow the DSL merged in the same trigger."""
+    src = str(tmp_path / "src")
+    example_messages(spark, n=24).coalesce(1).write.parquet(src)
+    envelope = spark.readStream.schema(
+        "topic string, key string, value string, ts timestamp"
+    ).parquet(src)
+    sarkac = Sarkac(
+        spark, {"dsl": {}, "discovery": {"enabled": True}}, work_dir=str(tmp_path / "work")
+    )
+    sarkac.analyse(envelope, trigger_seconds=1).processAllAvailable()
+    sarkac.close()
+
+    assert {p for _, p, _ in sarkac.pipeline.dsl.tasks()} == {"sub.one", "two"}
+    store = spark.read.parquet(str(tmp_path / "work" / "store"))
+    counts = {
+        (r.epoch, r.field_path): r["count"]
+        for r in store.groupBy("epoch", "field_path").count().collect()
+    }
+    assert counts == {(0, "sub.one"): 24, (0, "two"): 24}
+
+
 @pytest.mark.slow  # measured >=14 s in the r13 duration profile
 def test_live_discovery_tracks_new_topic(spark, tmp_path):
     """The headline reference feature: an undeclared topic appears on the
